@@ -15,80 +15,13 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  /** Connected components by iterative min-label propagation.
-    *
-    * Each iteration is one keyed shuffle (join edges with current labels on
-    * the source endpoint, then a min-aggregate per node) — never an n² step —
-    * and converges in O(component diameter) iterations. Near-duplicate
-    * clusters are dense (every member collides with the keeper through shared
-    * bands/chunks), so diameters are tiny in practice; for adversarial
-    * long-chain graphs the alternating large-star/small-star variant
-    * (Kiveris et al., "Connected Components in MapReduce", SoCC'14) bounds
-    * rounds at O(log n) with the same per-round shuffle shape — the loop
-    * below is the standard production form for dedup workloads.
-    *
-    * Lineage is truncated via [[Lineage.truncate]] every iteration so the plan
-    * stays O(1) deep regardless of iteration count (without it, each round
-    * re-plans all prior rounds and the driver OOMs on plan depth long before
-    * data size matters). The convergence probe (`isEmpty` on changed labels)
-    * is one cheap distributed action per round — the standard driver-side
-    * control loop for iterative algorithms (same shape GraphX uses); no row
-    * data ever reaches the driver.
-    *
-    * @param pairs undirected candidate edges, one row per pair
-    * @return (node, label) — label is the minimum node id in the component
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    // both edge directions from ONE evaluation of the (possibly expensive)
-    // pair-generation subtree — a union of two selects over `pairs` would
-    // recompute it per branch
-    val edges = Lineage.truncate(pairs.select(explode(array(
-        struct(col(aCol).as("a"), col(bCol).as("b")),
-        struct(col(bCol).as("a"), col(aCol).as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .distinct())
-    var labels = Lineage.truncate(edges.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val propagated = edges.join(labels.withColumnRenamed("node", "a"), Seq("a"))
-        .select(col("b").as("node"), col("label"), lit(0).as("own"))
-      // the node's previous label rides through the min-aggregate (own=1 rows
-      // are exactly the old assignment, unique per node), so convergence is a
-      // filter over the already-materialized result — not a join job
-      // Round-14 note: a pointer-jump variant (v also receives
-      // label(label(v)) via a self-join of the checkpointed labels) was
-      // measured here in three formulations: it does cut rounds 10 -> 6 on
-      // the sf0.1 rep graph, but each round gains the jump join's stages
-      // and the measured wall/job-count was flat to worse (71-76 jobs,
-      // 4.8-5.0 s -> 89 jobs, 5.5 s) — at this scale the loop is bounded
-      // by per-stage scheduling, not by round count. Kept as the simple
-      // O(diameter) form; the alternating large/small-star operator remains
-      // the adversarial-diameter escape hatch.
-      val next = Lineage.truncate(
-        labels.select(col("node"), col("label"), lit(1).as("own"))
-          .unionByName(propagated)
-          .groupBy(col("node"))
-          .agg(min(col("label")).as("label"),
-            min(when(col("own") === 1, col("label"))).as("prev")))
-      converged = next.filter(col("label") =!= col("prev")).isEmpty
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-    }
-    require(converged, s"connectedComponents: no fixpoint after $maxIter iterations")
-    labels
-  }
-
   /** Connected components by alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14) — O(log n) rounds regardless of component diameter, where
-    * [[connectedComponents]]' min-label propagation needs O(diameter)
-    * rounds. Use this variant when components can be long chains (e.g.
-    * transitively-linked near-dups across shingled revisions); the dense
-    * star-shaped clusters dedup normally produces converge in 2-3 rounds
-    * under either algorithm.
+    * min-label propagation needs O(diameter) rounds: components can be long
+    * chains (e.g. transitively-linked near-dups across shingled revisions),
+    * and the dense star-shaped clusters dedup normally produces converge in
+    * 2-3 rounds.
     *
     * Each round is two keyed aggregate+join passes over the edge list:
     *  - large-star: every node points its LARGER neighbors at the minimum
@@ -98,13 +31,13 @@ object Clustering {
     * The edge list only shrinks toward the final star forest (one edge per
     * non-root node), so per-round cost is bounded by the input edge count.
     *
-    * @return (node, label) with label = component minimum, identical to
-    *         [[connectedComponents]] (spec-asserted on random graphs)
+    * @return (node, label) with label = component minimum (GraphLawsSpec
+    *         checks it against union-find on random graphs)
     */
   def connectedComponentsAlternating(pairs: DataFrame, aCol: String, bCol: String,
                                      maxRounds: Int = 20): DataFrame = {
     // canonical undirected form (lo, hi), self-loops dropped
-    var edges = Lineage.truncate(pairs
+    val edges = Lineage.truncate(pairs
       .select(least(col(aCol), col(bCol)).as("lo"), greatest(col(aCol), col(bCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
       .distinct())
@@ -158,16 +91,17 @@ object Clustering {
         .distinct()
     }
 
-    // Convergence probe (round 14): the loop's fixpoint is exactly a STAR
-    // FOREST — every edge (lo, hi) is root→leaf, i.e. no node has two
-    // parents (hi appearing twice) and no node is both child and parent
-    // (hi also appearing as lo). A star forest is a fixpoint of
-    // largeStar∘smallStar (roots are local minima since lo < hi per edge),
-    // and Kiveris et al. §3 show the fixpoint edge set is always a star
-    // forest — so probing the property BEFORE the round is equivalent to
-    // the old next==edges comparison, but costs ONE aggregation job over
-    // the checkpointed edges instead of two exceptAll set-differences plus
-    // a full extra large/small-star round that computes no change.
+    // Convergence test: the loop's fixpoint is exactly a STAR FOREST —
+    // every edge (lo, hi) is root→leaf, i.e. no node has two parents (hi
+    // appearing twice) and no node is both child and parent (hi also
+    // appearing as lo). A star forest is a fixpoint of largeStar∘smallStar
+    // (roots are local minima since lo < hi per edge), and Kiveris et al.
+    // §3 show the fixpoint edge set is always a star forest — so testing
+    // each round's output is equivalent to a next==prev comparison, but
+    // costs ONE aggregation job over the checkpointed edges instead of two
+    // exceptAll set-differences plus a full extra round that computes no
+    // change. An input that is already a star forest is a fixpoint, so one
+    // round over it returns it unchanged.
     def isStarForest(e: DataFrame): Boolean =
       e.select(explode(array(
           struct(col("lo").as("node"), lit(0).as("child")),
@@ -177,16 +111,10 @@ object Clustering {
         // two parents, or child-and-parent (a chain) — either breaks a star
         .filter(col("nc") > 1 || (col("nc") === 1 && col("n") > 1))
         .isEmpty
-    var converged = isStarForest(edges)
-    var round = 0
-    while (!converged && round < maxRounds) {
-      edges = Lineage.truncate(smallStar(largeStar(edges)))
-      round += 1
-      converged = isStarForest(edges)
-    }
-    require(converged, s"connectedComponentsAlternating: no fixpoint after $maxRounds rounds")
+    val forest = Lineage.fixpoint("connectedComponentsAlternating", edges, maxRounds)(
+      e => smallStar(largeStar(e)))(identity)((_, next) => isStarForest(next))
     // fixpoint is a star forest: every non-root edge is (root, node)
-    allNodes.join(edges.select(col("lo").as("label"), col("hi").as("node")), Seq("node"), "left")
+    allNodes.join(forest.select(col("lo").as("label"), col("hi").as("node")), Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))
   }
 
@@ -197,7 +125,7 @@ object Clustering {
   def assignClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
                      aCol: String, bCol: String): DataFrame =
     sizeAndFlag(docs.select(col(idCol).as("doc_id"))
-      .join(connectedComponents(pairs, aCol, bCol).withColumnRenamed("node", "doc_id"),
+      .join(connectedComponentsAlternating(pairs, aCol, bCol).withColumnRenamed("node", "doc_id"),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id")))
 
@@ -217,8 +145,7 @@ object Clustering {
     // propagation — the sf0.1 rep graph needed ~10 propagation rounds
     // (chained near-dups), and each round costs a fixed planning/scheduling
     // floor locally and a full |edges| join at scale; the alternating form
-    // is O(log n) rounds with identical labels (component minimum,
-    // spec-asserted equal on random graphs).
+    // is O(log n) rounds with identical labels (the component minimum).
     val labels = connectedComponentsAlternating(repPairs, "rep_a", "rep_b")
     sizeAndFlag(memb
       .join(labels.withColumnRenamed("node", "rep_id"), Seq("rep_id"), "left")

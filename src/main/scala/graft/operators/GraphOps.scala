@@ -19,12 +19,12 @@ import org.apache.spark.sql.types.DoubleType
   *  - integer arithmetic end to end (hop counts, integer weights, BIGINT
   *    fixed-point ranks, vote counts) so results are bit-identical at any
   *    partitioning — no float-summation-order hazard;
-  *  - iteration outputs that feed multiple consumers in the next round get
-  *    their lineage truncated ([[Lineage.truncate]] — localCheckpoint by
-  *    default, durable `checkpoint()` under the opt-in reliable mode) by the
-  *    CALLER where lineage blowup is the hazard
-  *    (see kcorePeel, which does it internally: each round reads its input
-  *    three times).
+  *  - round loops run through [[Lineage.fixpoint]] / [[Lineage.iterate]],
+  *    which truncate the initial state and every round's output
+  *    (localCheckpoint by default, durable `checkpoint()` under the opt-in
+  *    reliable mode) — each round reads its input several times, so an
+  *    untruncated loop replicates the input plan per round. Edge inputs
+  *    that every round references are truncated once up front.
   */
 object GraphOps {
 
@@ -52,25 +52,17 @@ object GraphOps {
       .select(col("node"), least(col("dist"), col("cand")).as("dist"))
   }
 
-  /** Relax until a fixpoint: distances checkpointed per round (the
-    * iteration reads them twice next round), convergence probed with one
-    * cheap distributed anti-comparison — the [[graft.operators.Clustering]]
-    * control-loop shape, no row data on the driver. */
-  private def relaxToFixpoint(und: DataFrame, isSource: Column => Column,
+  /** Relax until no distance changes — the convergence test is one cheap
+    * distributed anti-comparison of consecutive rounds, no row data on the
+    * driver. */
+  private def relaxToFixpoint(op: String, und: DataFrame, isSource: Column => Column,
                               cost: Column, maxRounds: Int): DataFrame = {
     val undM = Lineage.truncate(und) // see relaxBounded — one copy per round otherwise
-    var d = Lineage.truncate(initialDistances(undM, isSource))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      val next = Lineage.truncate(relaxRound(undM, d, cost))
-      converged = next.alias("n").join(d.alias("p"), Seq("node"))
+    Lineage.fixpoint(op, initialDistances(undM, isSource), maxRounds)(
+        relaxRound(undM, _, cost))(identity) { (prev, next) =>
+      next.alias("n").join(prev.alias("p"), Seq("node"))
         .filter(!(col("n.dist") <=> col("p.dist"))).isEmpty
-      d = next
-      i += 1
-    }
-    require(converged, s"no shortest-path fixpoint after $maxRounds rounds")
-    d.filter(col("dist").isNotNull)
+    }.filter(col("dist").isNotNull)
   }
 
   /** `relaxRound` references the previous round's DataFrame twice
@@ -94,10 +86,7 @@ object GraphOps {
     val d =
       if (rounds <= LazyRoundLimit)
         Iterator.iterate(d0)(relaxRound(undM, _, cost)).drop(rounds).next()
-      else
-        (1 to rounds).foldLeft(Lineage.truncate(d0)) { (d, _) =>
-          Lineage.truncate(relaxRound(undM, d, cost))
-        }
+      else Lineage.iterate(d0, rounds)(relaxRound(undM, _, cost))
     d.filter(col("dist").isNotNull)
   }
 
@@ -116,7 +105,7 @@ object GraphOps {
     * runaway guard only. */
   def bfsToFixpoint(und: DataFrame, isSource: Column => Column,
                     maxRounds: Int = 200): DataFrame =
-    relaxToFixpoint(und, isSource, lit(1), maxRounds)
+    relaxToFixpoint("bfsToFixpoint", und, isSource, lit(1), maxRounds)
 
   /** Bounded-round single/multi-source shortest paths over an undirected
     * weighted (a, b, w) edge list — synchronous Bellman-Ford: after
@@ -131,49 +120,36 @@ object GraphOps {
     * GraphLawsSpec pins equality with Dijkstra). */
   def ssspToFixpoint(und: DataFrame, isSource: Column => Column,
                      maxRounds: Int = 200): DataFrame =
-    relaxToFixpoint(und, isSource, col("w"), maxRounds)
+    relaxToFixpoint("ssspToFixpoint", und, isSource, col("w"), maxRounds)
 
   /** Bounded k-core peeling (Seidman 1983; Batagelj–Zaveršnik degree peel,
     * distributed) over a (u, v) edge list stored one row per undirected
-    * edge: `rounds` synchronous rounds of "drop every node with degree < k,
-    * keep edges whose BOTH endpoints survive". Reaches the true k-core once
-    * `rounds` covers the longest peel cascade (GraphLawsSpec pins this
-    * against sequential peeling run to fixpoint). Each round reads its
-    * input three times (degree agg + two semi-joins), so every round's
-    * output gets its lineage truncated — without it the input plan would
-    * replicate 3^rounds times. Returns the surviving edges. */
+    * edge: `rounds` synchronous rounds of [[peelRound]]. Reaches the true
+    * k-core once `rounds` covers the longest peel cascade (GraphLawsSpec
+    * pins this against sequential peeling run to fixpoint). Each round
+    * reads its input three times (degree agg + two semi-joins), so the
+    * input and every round's output get their lineage truncated — without
+    * it the input plan would replicate 3^rounds times. Returns the
+    * surviving edges. */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    (1 to rounds).foldLeft(edges) { (e, _) =>
-      val und = e.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(e.select(col("v").as("a"), col("u").as("b")))
-      val keep = und.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("a").as("node"))
-      Lineage.truncate(
-        e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-          .select(col("u"), col("v")))
-    }
+    Lineage.iterate(edges, rounds)(peelRound(_, k))
 
   /** [[kcorePeel]] iterated to a FIXPOINT — the TRUE k-core, no round
     * budget to tune (the bounded form needs rounds ≥ the longest peel
     * cascade, which a chain makes O(n)): peel until no edge drops,
-    * convergence probed with one count per round (each round's output is
-    * already checkpointed by [[kcorePeel]]). */
-  def kcoreToFixpoint(edges: DataFrame, k: Int, maxRounds: Int = 200): DataFrame = {
-    var e = Lineage.truncate(edges)
-    var n = e.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      val next = kcorePeel(e, k, rounds = 1)
-      val m = next.count()
-      converged = m == n
-      e = next; n = m
-      i += 1
-    }
-    require(converged, s"no k-core fixpoint after $maxRounds rounds")
-    e
+    * convergence probed with one count per round. */
+  def kcoreToFixpoint(edges: DataFrame, k: Int, maxRounds: Int = 200): DataFrame =
+    Lineage.fixpoint("kcoreToFixpoint", edges, maxRounds)(peelRound(_, k))(_.count())(_ == _)
+
+  /** One peel round: drop every node with degree < k, keep edges whose BOTH
+    * endpoints survive. */
+  private def peelRound(e: DataFrame, k: Int): DataFrame = {
+    val keep = undirect(e).groupBy(col("a")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+      .select(col("a").as("node"))
+    e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+      .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+      .select(col("u"), col("v"))
   }
 
   /** Deterministic synchronous label propagation over an undirected (a, b)

@@ -287,8 +287,8 @@ object Graphs {
     * Each round references its input THREE times (degree agg + two
     * semi-joins), so without lineage truncation the expensive co-supply
     * edge build would replicate 3^rounds times in the final plan (measured
-    * 9.1s at sf0.1); lineage truncation ([[graft.operators.Lineage]]) per round
-    * keeps it materialized once — the [[graft.operators.Clustering]] iteration contract. */
+    * 9.1s at sf0.1); [[graft.operators.GraphOps.kcorePeel]] truncates the
+    * edge list and every round's output, keeping it materialized once. */
   private val KcoreRounds = 3
   private val KcoreK = 3
 
@@ -300,9 +300,7 @@ object Graphs {
       .select(col("a.s").as("u"), col("b.s").as("v"))
       .distinct()
       .filter((col("u") * 31 + col("v")) % 20 === 0)
-    val edgesCk = graft.operators.Lineage.truncate(edges)
-
-    val core = graft.operators.GraphOps.kcorePeel(edgesCk, KcoreK, KcoreRounds)
+    val core = graft.operators.GraphOps.kcorePeel(edges, KcoreK, KcoreRounds)
     core.select(col("u").as("a"), col("v").as("b"))
       .unionAll(core.select(col("v").as("a"), col("u").as("b")))
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg_in_core"))

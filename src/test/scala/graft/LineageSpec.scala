@@ -52,7 +52,7 @@ class LineageSpec extends SparkSpec {
       GraphOps.bfsToFixpoint(und, _ % 7 === 0)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def ccRun(): Set[(Long, Long)] =
-      Clustering.connectedComponents(edges, "u", "v")
+      Clustering.connectedComponentsAlternating(edges, "u", "v")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val (bfsLocal, ccLocal) = (bfsRun(), ccRun())
