@@ -66,9 +66,12 @@ object TextFunctions {
         i => concat_ws(" ", (0 until n).map(j => element_at(t, i + j)): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** MinHash signature: for K hash functions (a_i*h + b_i) mod P over the
-    * element hashes, take the min. P is the Mersenne prime 2^31-1; element
-    * hashes are reduced mod P first so a*h+b stays < 2^62 (no overflow). */
+  /** MinHash signature constants: for K hash functions (a_i*h + b_i) mod P
+    * over the element hashes, take the min. P is the Mersenne prime 2^31-1;
+    * element hashes are reduced mod P first so a*h+b stays < 2^62 (no
+    * overflow). The signature itself is the native
+    * [[graft.plans.MinhashSignature]] kernel; [[sql.minhashSignature]]
+    * replays it for the oracle. */
   val MinhashP = 2147483647L
   val MinhashA: Seq[Long] = Seq(1610612741L, 805306457L, 402653189L, 201326611L,
     100663319L, 50331653L, 25165843L, 12582917L, 6291469L, 3145739L,
@@ -76,16 +79,6 @@ object TextFunctions {
   val MinhashB: Seq[Long] = Seq(12289L, 24593L, 49157L, 98317L, 196613L, 393241L,
     786433L, 1572869L, 3145739L, 6291469L, 12582917L, 25165843L,
     50331653L, 100663319L, 201326611L, 402653189L)
-
-  /** Signature as an array<long> of length K over a column of string arrays. */
-  def minhashSignature(elems: Column, k: Int = 16): Column = {
-    val hs = transform(elems, e => hash64(e) % MinhashP)
-    val aArr = array(MinhashA.take(k).map(lit): _*)
-    val bArr = array(MinhashB.take(k).map(lit): _*)
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(hs,
-        h => (element_at(aArr, i + 1) * h + element_at(bArr, i + 1)) % MinhashP)))
-  }
 
   /** BPE-ish subword segmentation regex (GPT-2-style coarse classes:
     * contractions, space-prefixed letter runs, digit runs, punctuation

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.plans.TextExpressions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,60 +26,38 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
 
-  /** One row per (doc, distinct k-shingle). Tokens and the shingle array
-    * are staged as their own projections so the regex split and the
-    * shingle build each run exactly once per doc (see
-    * [[TextFunctions.shinglesFromTokens]] for why inlining would be
-    * quadratic), then exploded so every downstream hash touches each
-    * shingle once. All codegen'd, no shuffle. */
-  private def shingleRows(docs: DataFrame, idCol: String, textCol: String,
-                          k: Int): DataFrame =
-    // Spread the narrow raw rows BEFORE the tokenize/shingle transform: the
-    // transform otherwise runs inside the scan stage — one task on a
-    // single-split input (guide §2.5; round 14, profiled single-task stages)
-    Spread.byKeyHeavy(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), "doc_id")
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("t"), k).as("ss"))
-      .select(col("doc_id"), explode(col("ss")).as("shingle"))
-
-  /** K-function MinHash signatures via explode + hash-agg: md5 runs once
-    * per (doc, shingle) row, then the K per-function minima are codegen'd
-    * `min` aggregates in a single shuffle keyed by doc. Same arithmetic as
-    * [[TextFunctions.minhashSignature]] (min over shingles of
-    * (a_i*h+b_i) mod P) but linear — the column-expression form
-    * re-evaluates the element hashes once per hash function because
-    * higher-order lambdas are interpreted with no CSE.
+  /** K-function MinHash signatures, one row per document: `sig` is the
+    * [[graft.plans.MinhashSignature]] kernel — tokenize, shingle, hash and
+    * the K affine minima (min over distinct shingles of (a_i·h + b_i)
+    * mod P) in one compiled per-row pass, no shingle rows and no shuffle
+    * beyond the spread. Documents with NULL text or fewer than `shingleK`
+    * tokens have no shingles, hence a NULL `sig`.
     *
-    * COLLISION CONTRACT (`shingleHash` hook, default the 60-bit
-    * md5-prefix [[TextFunctions.hash64]]): signatures are minima over the
-    * HASHED shingle set, so two distinct shingles colliding makes their
-    * docs share one hashed element — within one doc a collision is
+    * COLLISION CONTRACT (`shingleSpace`, default P = 2³¹−1): a shingle's
+    * element is h = (hash64(shingle) mod shingleSpace) mod P, where
+    * hash64 is the 60-bit md5 prefix of [[TextFunctions.hash64]], so
+    * elements live in [0, min(shingleSpace, P)). Signatures are minima
+    * over the HASHED shingle set: two distinct shingles colliding makes
+    * their docs share one element — within one doc a collision is
     * invisible (the set just holds the value once), across docs it can
     * shift signature slots and hence LSH agreement in either direction
-    * relative to an injective hash. Birthday bound: D distinct shingles
-    * collide somewhere with p ≈ D²/2⁶¹ (the sf0.1 gate corpus ≈ 27k
-    * distinct shingles ⇒ p ≈ 4e-10; reaching p≈1 needs ~2³⁰ ≈ 1e9
-    * distinct shingles — at 100 TB switch the hook to a full-width
-    * digest). The hook exists so `HashCollisionLawsSpec` can pin the
-    * hashed-set model in a deliberately tiny space; the default regime is
-    * pinned exactly by `MinhashLawsSpec`. */
+    * relative to an injective hash. Birthday bound at the default: D
+    * distinct shingles collide somewhere with p ≈ D²/2³² (the sf0.1 gate
+    * corpus has ≈ 27k, so p ≈ 0.17), and collisions are expected once D
+    * nears 2¹⁶; each perturbs at most the slots it wins, which LSH
+    * tolerates by design, and the oracle reduces mod P identically. `HashCollisionLawsSpec`
+    * pins the hashed-set model in a deliberately tiny space
+    * (`shingleSpace = 61`); the default regime is pinned exactly by
+    * `MinhashLawsSpec`. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 16, shingleK: Int = 3,
-                        shingleHash: Column => Column = TextFunctions.hash64): DataFrame = {
-    import TextFunctions.{MinhashA, MinhashB, MinhashP}
-    // pmod, not %: Spark's % keeps the dividend's sign, so a caller-supplied
-    // hook returning negative Longs would yield negative h and negative
-    // affine minima, silently skewing signatures (ADVICE r13). Identical to
-    // % for the non-negative default hash64.
-    val hashed = shingleRows(docs, idCol, textCol, shingleK)
-      .select(col("doc_id"), pmod(shingleHash(col("shingle")), lit(MinhashP)).as("h"))
-    val mins = (0 until k).map { i =>
-      min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % MinhashP).as(s"m$i")
-    }
-    hashed.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
+                        shingleSpace: Long = TextFunctions.MinhashP): DataFrame =
+    // Spread the narrow raw rows BEFORE the signature: it otherwise runs
+    // inside the scan stage — one task on a single-split input (guide
+    // §2.5; round 14, profiled single-task stages)
+    Spread.byKeyHeavy(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), "doc_id")
+      .select(col("doc_id"),
+        TextExpressions.minhashSignature(col("text"), k, shingleK, shingleSpace).as("sig"))
 
   /** MinHash + LSH near-dup candidates: K-hash signature, banded into
     * `bands` buckets; docs sharing any band key become a candidate pair,
@@ -89,23 +68,28 @@ object Dedup {
     * raw signature values concatenated verbatim (not a hash of them), so
     * two docs share a band key iff those signature slots are exactly
     * equal — the LSH banding contract. The only hash in the pipeline is
-    * the per-shingle `shingleHash` (see [[minhashSignatures]]'s collision
-    * contract and birthday bound). */
+    * the per-shingle hash reduced into `shingleSpace` (see
+    * [[minhashSignatures]]'s collision contract and birthday bound). */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    k: Int = 16, bands: Int = 4, minAgree: Double = 0.5,
-                   shingleHash: Column => Column = TextFunctions.hash64,
+                   shingleSpace: Long = TextFunctions.MinhashP,
                    maxPairsPerGroup: Int = Int.MaxValue): DataFrame = {
     val rows = k / bands
     // Tier 1: signatures and banding over distinct contents only (identical
     // text ⇒ identical signature ⇒ collides in every band with agreement
     // exactly 1.0) — see collapseExact.
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    val sig = minhashSignatures(reps, "doc_id", "text", k, shingleHash = shingleHash)
+    val sig = minhashSignatures(reps, "doc_id", "text", k, shingleSpace = shingleSpace)
+    // Docs without a signature get no band rows: concat_ws skips NULLs, so
+    // banding them would put every one under the key "" — one quadratic
+    // candidate bucket (the oracle's band keys for them are NULL). The guard
+    // sits inside the explode because a Filter on `sig` would be pushed
+    // below the spread into the scan stage, computing every signature twice.
     val banded = sig.select(col("doc_id"), col("sig"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
+      explode(when(col("sig").isNotNull, transform(sequence(lit(0), lit(bands - 1)),
         b => struct(b.as("band"),
           concat_ws("_", (1 to rows).map(r => element_at(col("sig"), b * rows + r)): _*)
-            .as("key")))).as("bk"))
+            .as("key"))))).as("bk"))
       .select(col("doc_id"), col("sig"), col("bk.band"), col("bk.key"))
     val a = banded.select(col("band"), col("key"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
     val b = banded.select(col("band"), col("key"), col("doc_id").as("doc_b"), col("sig").as("sig_b"))
@@ -120,13 +104,10 @@ object Dedup {
         (aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).cast(DoubleType) / k).as("sig_agree"))
       .filter(col("sig_agree") >= minAgree)
-    // Tier 2: intra-group pairs score exactly 1.0. Every multi-member
-    // group has a signature: null texts are singleton groups by
-    // construction, and any non-null text yields at least the "" shingle
-    // (shinglesFromTokens pads to one position), hence a signature — so no
-    // existence check is needed and the sig pipeline stays single-consumer.
-    // (Null-text docs still pair with each other through the CROSS path,
-    // exactly as uncollapsed: their signatures agree on the "" shingle.)
+    // Tier 2: intra-group pairs score exactly 1.0, signature or not. Null
+    // texts are singleton groups by construction. Null and sub-shingleK
+    // docs have no signature and no band rows, so they never cross-pair —
+    // the oracle agrees, since their band keys are NULL.
     val intra = reps.filter(col("csize") > 1)
       .select(col("doc_id").as("rep_id"))
       .withColumn("sig_agree", lit(1.0))

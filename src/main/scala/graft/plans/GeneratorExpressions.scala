@@ -16,11 +16,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `explode(transform(sequence(...)))` must (the staged-array formulation
   * the shingle pipelines use when they need the array anyway).
   *
-  * Tokenization contract (pinned by the oracle): trim, split on `\s+`;
-  * a document with fewer than `n` tokens yields no rows; NULL yields no
-  * rows. CodegenFallback is the normal cost model for generators — the
-  * generator itself is invoked per input row by GenerateExec while the
-  * surrounding stages stay inside whole-stage codegen.
+  * Tokenization contract (pinned by the oracle): Spark's
+  * `split(trim(text), "\\s+")` via [[TextExpressions.tokens]] — trim strips
+  * spaces only, and leading/trailing tabs or newlines leave empty edge
+  * tokens; a document with fewer than `n` tokens yields no rows; NULL
+  * yields no rows. CodegenFallback is the normal cost model for
+  * generators — the generator itself is invoked per input row by
+  * GenerateExec while the surrounding stages stay inside whole-stage
+  * codegen.
   */
 case class NgramGenerator(child: Expression, n: Int)
   extends Generator with CodegenFallback {
@@ -36,10 +39,11 @@ case class NgramGenerator(child: Expression, n: Int)
     val v = child.eval(input)
     if (v == null) Nil
     else {
-      val toks = v.toString.trim.split("\\s+")
+      val toks = TextExpressions.tokens(v.asInstanceOf[UTF8String])
+      val space = UTF8String.fromString(" ")
       if (toks.length < n) Nil
       else (0 to toks.length - n).iterator.map { i =>
-        InternalRow(UTF8String.fromString(toks.slice(i, i + n).mkString(" ")))
+        InternalRow(UTF8String.concatWs(space, toks.slice(i, i + n): _*))
       }
     }
   }

@@ -34,7 +34,7 @@ class FunctionsSpec extends SparkSpec {
       (1L, "w1 w2 w3 w4 w5 w6"), (2L, "w1 w2 w3 w4 w5 w6"), (3L, "x1 x2 x3 x4 x5 x6")
     )).toDF("id", "text")
     val sigs = df.select(col("id"),
-      TextFunctions.minhashSignature(TextFunctions.shingles(col("text"), 3)).as("sig"))
+      graft.plans.TextExpressions.minhashSignature(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L).length === 16)
     assert(sigs(1L) === sigs(2L))
@@ -134,7 +134,8 @@ class FunctionsSpec extends SparkSpec {
       (1L, "the quick brown fox"),
       (2L, "  padded   whitespace  "), // trim + \s+ collapse
       (3L, "single"),                  // fewer tokens than n -> no rows
-      (4L, null.asInstanceOf[String])  // null -> no rows
+      (4L, null.asInstanceOf[String]), // null -> no rows
+      (5L, "\tfoo bar baz\n")          // trim strips spaces only: empty edge tokens
     ).toDF("id", "text")
     df.createOrReplaceTempView("ngram_t")
     val got = spark.sql(
@@ -142,7 +143,8 @@ class FunctionsSpec extends SparkSpec {
       .as[(Long, String)].collect().sorted.toSeq
     assert(got == Seq(
       (1L, "brown fox"), (1L, "quick brown"), (1L, "the quick"),
-      (2L, "padded whitespace")))
+      (2L, "padded whitespace"),
+      (5L, " foo"), (5L, "bar baz"), (5L, "baz "), (5L, "foo bar")))
     // equivalence with the declarative staged-array formulation
     val decl = df.filter($"text".isNotNull)
       .select($"id", split(trim($"text"), "\\s+").as("toks"))

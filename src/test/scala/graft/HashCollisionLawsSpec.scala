@@ -215,8 +215,6 @@ class HashCollisionLawsSpec extends SparkSpec {
     import TextFunctions.{MinhashA, MinhashB, MinhashP}
     val K16 = 16; val bands = 4; val rows = K16 / bands; val minAgree = 0.5
     val space = 61L // prime, < MinhashP so the staging %P is a no-op
-    val tinyCol = (c: org.apache.spark.sql.Column) =>
-      pmod(TextFunctions.hash64(c), lit(space))
     def tinyRef(s: String): Long = {
       val h = refHash64(s) % space
       if (h < 0) h + space else h
@@ -240,7 +238,7 @@ class HashCollisionLawsSpec extends SparkSpec {
       }
       val df = spark.createDataFrame(docs).toDF("doc_id", "text")
       val got = collectPairs(Dedup.minhashPairs(df, "doc_id", "text",
-        K16, bands, minAgree, shingleHash = tinyCol))
+        K16, bands, minAgree, shingleSpace = space))
 
       // transcription over an arbitrary element hash (MinhashLawsSpec's
       // reference parameterized by the hash function)

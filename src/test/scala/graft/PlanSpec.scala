@@ -67,7 +67,14 @@ class PlanSpec extends SparkSpec {
     val plan = executedPlan("ded_minhash")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       "minhash LSH must join on (band, key), not cross-join")
-    assert(plan.contains("partial_min"), "signature minima should partial-aggregate map-side")
+    // the signature is one per-row kernel: no shingle explode, no min-aggregate
+    assert(plan.contains("graft_minhash("), "signatures should come from the native kernel")
+    assert(!plan.linesIterator.exists(l => l.contains("Filter") && l.contains("graft_minhash(")),
+      "a filter on the signature would run the kernel a second time in the scan stage")
+    assert(!plan.contains("partial_min"), "no signature min-aggregate should remain")
+    val generates = plan.linesIterator.filter(_.contains("Generate ")).toSeq
+    assert(generates.nonEmpty && generates.forall(_.contains("struct(band")),
+      "the only Generate should explode band keys, not shingles:\n" + generates.mkString("\n"))
   }
 
   test("shingle pipelines carry no re-inlined generate filter") {
