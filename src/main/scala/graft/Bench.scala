@@ -28,7 +28,7 @@ import java.util.concurrent.atomic.AtomicLong
   *     re-measured in isolation
   *     (suite state cleared, fresh warmup, median of `iters` — minimum
   *     for sub-second baseline rows); the FASTER of the two figures is
-  *     what BENCH_FULL.json's `queries` map and the stdout line carry
+  *     what BENCH_FULL_c<cpus>.json's `queries` map and the stdout line carry
   *     (pollution only inflates, and the isolated re-measure can itself
   *     hit host load — round 8's did), with both raw numbers kept
   *     side-by-side under `detail`. Round 13: each isolated re-measure is
@@ -368,7 +368,7 @@ object Bench {
     // parses the JSON line out of that buffer — at 180+ queries a
     // full-precision map is ~4KB and truncates, so BENCH_r{3,4}.json came
     // back parsed:null. Two outputs instead: the complete map (plus
-    // in-suite/isolated/telemetry detail) goes to BENCH_FULL.json (cwd =
+    // in-suite/isolated/telemetry detail) goes to BENCH_FULL_c<cpus>.json (cwd =
     // repo root; round-end auto-commit picks it up), and stdout carries a
     // line capped to fit the tail, keeping every failed query (-1 sentinel)
     // plus the most expensive ones — the entries the baseline comparison
@@ -401,16 +401,18 @@ object Bench {
         ",\"isolated\":" + isoStats(q.isolated) + "}"
     }.mkString("{", ",", "}")
 
-    // only full-surface runs own the committed artifact — a SPARK_GRAFT_ONLY
-    // subset run (scale ramps, spot checks) must not clobber it; its detail
-    // (shuffle/peak-mem telemetry) still lands in BENCH_SUBSET.json so a
-    // plan change can re-pin its BASELINE.md row without a full sweep
-    val artifact = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
+    // only full-surface runs own the committed artifact, one per core count
+    // so sweeps at different widths never overwrite each other — a
+    // SPARK_GRAFT_ONLY subset run (scale ramps, spot checks) must not
+    // clobber it; its detail (shuffle/peak-mem telemetry) still lands in
+    // BENCH_SUBSET.json so a plan change can re-pin its BASELINE.md row
+    // without a full sweep
+    val artifact = if (only.isEmpty) s"BENCH_FULL_c$cpus.json" else "BENCH_SUBSET.json"
     def writeArtifact(): Unit =
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(artifact),
         jsonLine(resultsNow,
-          "\"reconcile_budget_sec\":" + reconcileBudgetSec +
+          "\"cpus\":" + cpus + ",\"reconcile_budget_sec\":" + reconcileBudgetSec +
             ",\"reconcile_skipped\":" + skippedBudget.size +
             ",\"calibration\":" + calibJson + ",\"detail\":" + detailJson + ",") + "\n")
     def stdoutLine(): String = {

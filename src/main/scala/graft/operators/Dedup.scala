@@ -15,11 +15,11 @@ object Dedup {
 
   /** Exact dedup: group by md5 of normalized text, keep the minimum id as
     * canonical. One shuffle on the content hash — scales linearly.
-    * Round 15 note: an ifNarrow spread before the normalize+md5 projection
-    * was tried (the projection runs single-task inside a one-split scan)
-    * and MEASURED SLOWER everywhere (ded_exact 0.35 -> 0.53 s, cur_funnel
+    * Round 15 note: a spread before the normalize+md5 projection was
+    * tried (the projection runs single-task inside a one-split scan) and
+    * MEASURED SLOWER everywhere (ded_exact 0.35 -> 0.53 s, cur_funnel
     * 0.97 -> 1.38 s, cur_funnel2 2.92 -> 3.04 s at sf0.1): shuffling the
-    * text payload + the probe job cost more than the serial projection.
+    * text payload cost more than the serial projection.
     * Kept exchange-free — the text never shuffles. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), md5(TextFunctions.normalize(col(textCol)).cast(BinaryType)).as("content_hash"))
@@ -55,7 +55,7 @@ object Dedup {
     // Spread the narrow raw rows BEFORE the signature: it otherwise runs
     // inside the scan stage — one task on a single-split input (guide
     // §2.5; round 14, profiled single-task stages)
-    Spread.byKeyHeavy(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), "doc_id")
+    Spread(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), col("doc_id"))
       .select(col("doc_id"),
         TextExpressions.minhashSignature(col("text"), k, shingleK, shingleSpace).as("sig"))
 
@@ -138,9 +138,9 @@ object Dedup {
     // RAW corpus block membership exactly as uncollapsed (identical text
     // lands its whole cluster in one block).
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    // Round 14 note: a full-width Spread.byKey before the normalize was
-    // tried and measured slower (1.6 -> 1.9s at sf0.1). Round 15: retried
-    // at the memory-bounded width (byKeyHeavy, 12) after profiling showed
+    // Round 14 note: a full-width spread before the normalize was tried
+    // and measured slower (1.6 -> 1.9s at sf0.1). Round 15: retried at
+    // the memory-bounded width (12 at local[32]) after profiling showed
     // the normalize+prefix projection as a 0.67 s single-task stage — STILL
     // slower (1.5 -> 1.83 s): the text exchange + extra stage outweigh the
     // projection at this payload size. Kept exchange-free both rounds.
@@ -332,7 +332,7 @@ object Dedup {
     // 60-bit within-union md5 collision (~1e-10 corpus-wide). The
     // brute-force law in DedupLawsSpec compares against STRING-set jaccard
     // and stays green — the collision-free regime really is value-exact.
-    // Round 14 note: a Spread.byKey before this transform was tried and
+    // Round 14 note: a spread before this transform was tried and
     // MEASURED SLOWER (2.3 -> 3.0s at sf0.1): inv0's three consumers prune
     // different columns, so the transform recomputes per consumer either
     // way, and the extra exchange + per-task overhead of three wide stages
@@ -343,16 +343,16 @@ object Dedup {
     // consumers' map sides) — 3.0 s of the query's 4.5 s task time. The
     // index is now materialized ONCE via Lineage.truncate (same per-run
     // localCheckpoint mechanism the graph fixpoints use — recomputed every
-    // run, nothing persists across runs), built wide behind a
-    // memory-bounded spread so the single materialization uses the
-    // machine. All four consumers then read the checkpointed rows. At
-    // 100 TB this is the standard materialize-the-inverted-index call:
+    // run, nothing persists across runs), built wide behind a Spread so
+    // the single materialization uses the machine. All four consumers
+    // then read the checkpointed rows. At 100 TB this is the standard
+    // materialize-the-inverted-index call:
     // the index is 24 B/row versus a ~4x recompute of the full token
     // stream, and reliable-checkpoint mode (Lineage.ReliableKey) keeps it
     // fault-tolerant on a real cluster.
     val inv0 = Lineage.truncate(
-      Spread.byKeyHeavy(
-          reps.select(col("doc_id"), col("csize"), col("text")), "doc_id")
+      Spread(
+          reps.select(col("doc_id"), col("csize"), col("text")), col("doc_id"))
         .select(col("doc_id"), col("csize"), TextFunctions.tokens(col("text")).as("t"))
         .select(col("doc_id"), col("csize"),
           TextFunctions.shinglesFromTokens(col("t"), k).as("ss"))
@@ -486,8 +486,11 @@ object Dedup {
     // differently and the transform executed twice (two 3.05 MB exchanges
     // in the r14 before-plan). tok is provably non-null (md5 of non-null
     // shingles), so the filter is a no-op that makes every copy identical —
-    // one execution + ReusedExchange for the rest.
-    val srows = Spread.saltedHeavy(reps.select(col("doc_id"), col("text")), "doc_id")
+    // one execution + ReusedExchange for the rest. The spread is keyed on
+    // xxhash64(doc_id), not doc_id: hashing by doc_id itself would already
+    // satisfy the shared repartition(doc_id) below, the optimizer would
+    // drop that exchange, and the transform would run once per consumer.
+    val srows = Spread(reps.select(col("doc_id"), col("text")), xxhash64(col("doc_id")))
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
       .select(col("doc_id"),
         TextFunctions.shinglesFromTokens(col("t"), shingleK).as("ss"))
@@ -598,8 +601,10 @@ object Dedup {
     // contain oracle hashes identically before its all-pairs replay).
     // Spread + explicit isnotnull: same two round-14 fixes as
     // [[prefixJaccardPairs]] (single-task transform stage; filter-pushdown
-    // divergence defeating the shared exchange's reuse).
-    val srows = Spread.saltedHeavy(reps.select(col("doc_id"), col("text")), "doc_id")
+    // divergence defeating the shared exchange's reuse). The spread's key
+    // is hashed so its partitioning stays distinct from the shared
+    // repartition(doc_id) below, which therefore survives.
+    val srows = Spread(reps.select(col("doc_id"), col("text")), xxhash64(col("doc_id")))
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
       .select(col("doc_id"),
         TextFunctions.shinglesFromTokens(col("t"), shingleK).as("ss"))
@@ -791,10 +796,9 @@ object Dedup {
 
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // spread before the normalize/tokenize/md5 transform (round 14,
-    // guide §2.5 — single-split inputs run it one-task otherwise; round 15:
-    // memory-bounded width, see Spread.heavyPartitions)
-    val toks = Spread.byKeyHeavy(
-        docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), "doc_id")
+    // guide §2.5 — single-split inputs run it one-task otherwise)
+    val toks = Spread(
+        docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), col("doc_id"))
       .select(col("doc_id"),
         explode(TextFunctions.tokens(TextFunctions.normalize(col("text")))).as("tok"))
       .select(col("doc_id"), TextFunctions.hash64(col("tok")).as("h"))

@@ -202,13 +202,13 @@ object Similarity {
     * the join is NULL-SAFE because groupBy puts NULL embeddings in a group
     * but a plain equi-join would silently drop their rows. */
   private def collapseVectors(corpus: DataFrame): DataFrame = {
-    // Round 15: explicit memory-bounded exchange on the join/group key —
+    // Round 15: explicit Spread exchange on the join/group key —
     // AQE otherwise coalesces the embedding-keyed exchanges to 2 partitions
     // on tiny bytes while the array-equality sort-merge is CPU-bound
     // (profiled 0.54 s 2-task stages inside cur_funnel2); the one explicit
     // exchange is shared by the groupBy and both join sides.
-    val keyed = Spread.byKeyHeavy(
-      corpus.select(col("vec_id"), col("embedding")), "embedding")
+    val keyed = Spread(
+      corpus.select(col("vec_id"), col("embedding")), col("embedding"))
     val grp = keyed.groupBy(col("embedding")).agg(min(col("vec_id")).as("rep_id"))
     keyed.alias("c")
       .join(grp.alias("g"), col("c.embedding") <=> col("g.embedding"))
@@ -245,11 +245,11 @@ object Similarity {
     // collapse groupBy's exchange coalesces to 2 partitions on tiny bytes
     // while the cosine work is CPU-bound). One per-run localCheckpoint
     // computes the assignment once; the checkpointed rows feed all three.
-    // byKeyHeavy widens the (CPU-bound) cosine stage itself for the single
+    // The Spread widens the (CPU-bound) cosine stage itself for the single
     // materialization — without it the assignment runs at the coalesced
     // 2-partition width of the collapse exchange.
     val asg = Lineage.truncate(
-      nearestCells(withNorm(Spread.byKeyHeavy(reps, "vec_id"), "corpus_id", "c_vec"),
+      nearestCells(withNorm(Spread(reps, col("vec_id")), "corpus_id", "c_vec"),
         "corpus_id", "c_vec", 1, seedCentroids(corpus, nCells)))
     val a = asg.select(col("cell_id"), col("corpus_id").as("id_a"),
       col("c_vec").as("emb_a"), col("corpus_id_norm").as("norm_a"))
@@ -415,8 +415,8 @@ object Similarity {
     // of a single-split corpus (profiled 0.4-0.5 s per iteration), and the
     // vec_id partitioning also satisfies the assignment window's
     // distribution; the exchange is reused across iterations.
-    val spreadCorpus = Spread.byKeyHeavy(
-      corpus.select(col("vec_id"), col("embedding")), "vec_id")
+    val spreadCorpus = Spread(
+      corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
     for (_ <- 1 to iters) {
       val aw = Window.partitionBy(col("vec_id")).orderBy(col("cscore").desc, col("cell_id"))
       val assigned = spreadCorpus
@@ -491,7 +491,7 @@ object Similarity {
     // spread before the subvector explode (round 14, guide §2.5): subs has
     // several consumers (codebook seed + two assignment passes), each
     // recomputing the parse — wide after the spread instead of one-task
-    val subs = Spread.byKeyHeavy(corpus.select(col("vec_id"), col("embedding")), "vec_id")
+    val subs = Spread(corpus.select(col("vec_id"), col("embedding")), col("vec_id"))
       .select(col("vec_id"),
       explode(array((0 until nSub).map { m =>
         struct(lit(m).as("m"),

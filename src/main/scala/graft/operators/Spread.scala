@@ -1,146 +1,71 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import graft.plans.TopKBudget
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Scan-parallelism floor for CPU-heavy row transforms (optimization guide
-  * §2.5 "input skew — one huge unsplittable file … repartition immediately
-  * after the read", §2.2 map-task sizing).
+/** Scan-parallelism floor for CPU-heavy row work (optimization guide §2.5
+  * "repartition immediately after the read", §2.2 map-task sizing).
   *
-  * The expensive per-row work in the dedup/similarity pipelines — tokenize,
-  * shingle assembly, per-element md5, embedding subvector parses — runs in
-  * whatever stage CONTAINS it. When that stage is the parquet scan of a
-  * single-row-group file (every local sf table; at cluster scale any
-  * unsplittable or skewed input), the whole transform executes in ONE task
-  * regardless of cores: profiled 0.7–0.8 s single-task stages dominating
-  * ded_prefix/ded_contain at sf0.1 while 31 cores idled.
+  * Expensive per-row work — tokenize, shingle, md5, JSON parse, a decimal
+  * partial aggregate — runs in whatever stage contains it. When that stage
+  * is the parquet scan of a one-row-group file (every local sf table; at
+  * cluster scale any unsplittable or skewed input), the work runs as ONE
+  * task whatever the core count. The scan's split count cannot tell this
+  * case apart: a 10.8 MB one-row-group lineitem plans as 3 byte-splits of
+  * which only one holds rows.
   *
-  * [[byKey]] inserts one keyed exchange of the NARROW raw rows (ids + text,
-  * the cheapest bytes the pipeline ever shuffles) below the transform, with
-  * an explicit partition count so AQE's coalescer cannot fold the tiny
-  * byte volume back into one task (coalescing targets bytes; these stages
-  * are CPU-bound, not byte-bound). The count is scale-derived, never a
-  * local constant: max(defaultParallelism, spark.sql.shuffle.partitions) —
-  * cores on this deployment, or the operator-level width the cluster
-  * already configured, whichever is larger.
+  * `Spread(df, key)` therefore always inserts exactly one exchange,
+  * `df.repartition(width, key)`, below the work. Callers pass the narrow
+  * projected rows (ids plus the columns the work reads), the cheapest bytes
+  * the pipeline ever shuffles — 3–5x smaller than the exploded shingle/gram
+  * rows these pipelines already exchange. The explicit partition count keeps
+  * AQE's byte-targeted coalescer off (a REPARTITION_BY_NUM exchange is never
+  * coalesced), since these stages are CPU-bound, not byte-bound. Hash
+  * partitioning on a key is deterministic, so retries and speculation see
+  * the same rows (unlike rand-derived keys, guide §2.5).
   *
-  * Cost model at 100 TB: one extra shuffle of raw text per pipeline, which
-  * is 3–5x SMALLER than the exploded shingle/gram rows these pipelines
-  * already exchange — and it buys even distribution of the dominant CPU
-  * stage independent of input file layout/skew. Hash partitioning on the
-  * id key is deterministic (safe under retry/speculation, unlike
-  * rand-derived keys — guide §2.5).
-  */
+  * The width comes from configuration alone — no probe of the plan, no read
+  * of live cluster state:
+  *   - full  = max(spark.default.parallelism, spark.sql.shuffle.partitions),
+  *     the parallelism defaulting to executors × slots from the master;
+  *   - slots = concurrent tasks per executor ([[TopKBudget.taskSlots]]);
+  *   - fit   = max(2, executor unified pool / 384 MB): how many tasks'
+  *     transient state (shingle/token explodes, per-element array builds)
+  *     one executor's pool holds at once. The pool is this JVM's heap in
+  *     local mode and `spark.executor.memory` elsewhere
+  *     ([[TopKBudget.executorPoolBytes]]); 384 MB is the worst pipeline's
+  *     measured peak task footprint (ded_phash, 343 MB) with headroom;
+  *   - width = full when fit ≥ slots, else max(2, min(full, executors × fit)).
+  * Where memory does not bind the width is the full width: local[4] with
+  * 3 GB → 4, local-cluster[2,2,1536] → 4. Where it binds, the width caps
+  * the stage's tasks, and so the tasks running at once, at what the pools
+  * hold, however many shuffle partitions are configured: at local[32] on
+  * one 8 GB heap, 32 concurrent explode tasks ran ded_phash at 7.76 s where
+  * 8 ran it at 0.80 s; the width there is 12.
+  *
+  * Salted keys: a caller that keeps its own `repartition(col(k))` above the
+  * work, as one exchange shared by several consumers, passes a hash of the
+  * key (`xxhash64(col(k))`) instead of `col(k)`. Spreading by `k` itself
+  * would already satisfy that exchange's partitioning, the optimizer would
+  * remove it, and the work would run once per consumer again; the hash keeps
+  * the two partitionings distinct. */
 object Spread {
 
-  def partitions(df: DataFrame): Int = {
+  def apply(df: DataFrame, key: Column): DataFrame = {
     val spark = df.sparkSession
-    math.max(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    df.repartition(
+      width(spark.sparkContext.getConf, spark.conf.get("spark.sql.shuffle.partitions").toInt), key)
   }
 
-  /** Per-task transient-state budget for explode-heavy transforms, used by
-    * [[heavyPartitions]]. Default 384 MB ≈ the driver-measured peak task
-    * footprint of the worst pipeline (ded_phash r14: 343 MB) with headroom. */
-  val HeavyTaskBytesKey = "spark.graft.spread.heavyTaskBytes"
+  private val TaskBytes = 384L << 20
 
-  /** Width for transforms whose per-row work materializes LARGE transient
-    * state — shingle/token explodes, per-element array builds — bounded so
-    * the concurrent-task memory demand stays inside the executor's unified
-    * pool (guide §2.2 map-task sizing, §5 memory per task). Round 14 set
-    * these stages to full core width unconditionally and the driver's
-    * local[32] suite measured the cost: 32 concurrent explode tasks against
-    * one 8 GB heap ran ded_phash at 7.76 s where 8 tasks ran it at 0.80 s
-    * (scaling ratio 0.10), with the same signature on ded_cluster /
-    * ded_minhash / ded_winnow / sim_ivfpq. The bound is
-    * `executors × (unifiedPool / perTaskBudget)` — purely scale-derived:
-    * on a real cluster (e.g. 64 GB executors, 8 slots ⇒ pool/budget ≈ 100
-    * per executor) it exceeds the slot count and is a NO-OP, so cluster
-    * width stays whatever the deployment configured; only where the memory
-    * arithmetic actually binds (one small shared heap) does it narrow. */
-  def heavyPartitions(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.getConf
-    val budget = math.max(1L, conf.getLong(HeavyTaskBytesKey, 384L << 20))
-    val pool = graft.plans.TopKBudget.unifiedPoolBytes(conf)
-    val perExec = math.max(2L, pool / budget)
-    val execs = math.max(1, spark.sparkContext.statusTracker.getExecutorInfos.length - 1)
-    math.max(2, math.min(partitions(df).toLong, perExec * execs).toInt)
-  }
-
-  /** Repartition `df` by `key` into an explicit scale-derived partition
-    * count, so everything composed above runs wide even when the input
-    * collapses to a single scan split. Use when downstream consumers WANT
-    * the key partitioning (windows / groupBys on `key` then need no further
-    * exchange). */
-  def byKey(df: DataFrame, key: String): DataFrame =
-    df.repartition(partitions(df), col(key))
-
-  /** [[byKey]] at [[heavyPartitions]] width — for spreads feeding
-    * explode-heavy transforms (round 15; see heavyPartitions). */
-  def byKeyHeavy(df: DataFrame, key: String): DataFrame =
-    df.repartition(heavyPartitions(df), col(key))
-
-  /** CONDITIONAL [[byKey]]: repartition only when the plan's actual scan
-    * parallelism is below the session's core count — the "repartition
-    * immediately after the read" rule of guide §2.5 applied exactly when
-    * its precondition (an unsplittable/collapsed input) holds. At cluster
-    * scale a large input has thousands of splits and this is a NO-OP (no
-    * exchange added, no bytes moved); on a single-row-group file — every
-    * local sf table — it spreads the rows so a CPU-heavy projection above
-    * it can use the machine.
-    *
-    * PRECONDITION (ADVICE r14): `df` must be EXCHANGE- and SUBQUERY-FREE —
-    * a bare scan/projection. The probe (`rdd.getNumPartitions`) only
-    * "plans without executing" for such plans; under AQE, calling `.rdd`
-    * on a plan containing exchanges materializes its query stages, i.e.
-    * runs real shuffle jobs at query-CONSTRUCTION time, and the final
-    * query then re-executes them (the stages belong to a throwaway
-    * execution). Every current call site passes a raw table select. Use
-    * for expensive per-row projections; NOT for aggregations, where
-    * shuffling rows below a partial aggregate is the §2.3 anti-pattern at
-    * any scale. */
-  def ifNarrow(df: DataFrame, key: String): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, cores / 2)) byKey(df, key) else df
-  }
-
-  /** [[ifNarrow]] at [[heavyPartitions]] width (round 15): for conditional
-    * spreads whose downstream stages fan out into several shuffled
-    * consumers — full core width multiplies every consumer stage's
-    * task-launch/sort overhead by the width, which dominates when the
-    * per-task work is small (txt_lmscore measured 1.18 s at width 32 vs
-    * 0.49 s at width 8 on the same 32-core host). Same exchange-free-input
-    * precondition as ifNarrow. */
-  def ifNarrowHeavy(df: DataFrame, key: String): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, cores / 2))
-      df.repartition(heavyPartitions(df), col(key))
-    else df
-  }
-
-  /** [[byKey]] variant on a SALTED key (pmod(xxhash64(key), 64·n) — well
-    * over the 20-100x distinct-values-per-partition guideline of guide
-    * §2.5, and deterministic, never rand-derived). Use when the pipeline
-    * keeps its OWN `repartition(col(key))` above the transform as a shared
-    * multi-consumer exchange: spreading by `key` itself would make that
-    * exchange redundant (same partitioning) and the optimizer removes it,
-    * putting the transform back to once-per-consumer. The salt keeps the
-    * two partitionings distinct, so the shared exchange — and with it the
-    * exactly-once transform — survives. */
-  def salted(df: DataFrame, key: String): DataFrame = {
-    val n = partitions(df)
-    df.repartition(n, org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.xxhash64(col(key)),
-      org.apache.spark.sql.functions.lit(64L * n)))
-  }
-
-  /** [[salted]] at [[heavyPartitions]] width (round 15) — same
-    * shared-exchange-preserving salt, memory-bounded concurrency. */
-  def saltedHeavy(df: DataFrame, key: String): DataFrame = {
-    val n = heavyPartitions(df)
-    df.repartition(n, org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.xxhash64(col(key)),
-      org.apache.spark.sql.functions.lit(64L * n)))
+  private[graft] def width(conf: SparkConf, shufflePartitions: Int): Int = {
+    val slots = TopKBudget.taskSlots(conf)
+    val full = math.max(shufflePartitions,
+      conf.getInt("spark.default.parallelism", TopKBudget.executors(conf) * slots))
+    val fit = math.max(2L, TopKBudget.executorPoolBytes(conf) / TaskBytes)
+    if (fit >= slots) full
+    else math.max(2L, math.min(full.toLong, TopKBudget.executors(conf) * fit)).toInt
   }
 }

@@ -60,8 +60,8 @@ object Winnow {
     // scan stage, and the doc-keyed exchange this inserts ALSO satisfies
     // byDoc's window distribution, so the gram/md5/window stage runs wide
     // with no additional exchange.
-    Spread.byKeyHeavy(docs.select(col(idCol).as("doc_id") +: col(textCol).as("__text") +: ex: _*),
-        "doc_id")
+    Spread(docs.select(col(idCol).as("doc_id") +: col(textCol).as("__text") +: ex: _*),
+        col("doc_id"))
       .select(col("doc_id") +:
         TextFunctions.tokens(TextFunctions.normalize(col("__text"))).as("t") +: ex: _*)
       .filter(size(col("t")) >= k)

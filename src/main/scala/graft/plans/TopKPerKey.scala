@@ -118,19 +118,31 @@ object TopKBudget {
   def derivedPerTaskBytes(poolBytes: Long, slots: Int): Long =
     math.max(AutoMinBytes, poolBytes / (2L * math.max(1, slots)))
 
-  /** Concurrent task slots on THIS executor: local[N] masters run N
-    * in-JVM slots; otherwise executor cores / task cpus (conservative
-    * availableProcessors fallback when unset, e.g. local-cluster). */
-  def taskSlots(conf: org.apache.spark.SparkConf): Int = {
-    val Local = """local\[([0-9]+|\*).*\]""".r
-    conf.get("spark.master", "") match {
-      case Local(n) =>
-        if (n == "*") Runtime.getRuntime.availableProcessors() else n.toInt
-      case _ =>
-        val cores = conf.getInt("spark.executor.cores",
-          Runtime.getRuntime.availableProcessors())
-        math.max(1, cores / math.max(1, conf.getInt("spark.task.cpus", 1)))
-    }
+  private val Local = """local(?:\[([0-9]+|\*).*\])?""".r
+  private val LocalCluster = """local-cluster\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,.*\]""".r
+
+  /** Concurrent task slots on one executor: local[N] masters run N
+    * in-JVM slots; otherwise executor cores / task cpus, where unset
+    * executor cores mean the whole worker (local-cluster's `c`) or, as a
+    * conservative fallback, availableProcessors. */
+  def taskSlots(conf: org.apache.spark.SparkConf): Int = conf.get("spark.master", "") match {
+    case Local(null) => 1
+    case Local("*") => Runtime.getRuntime.availableProcessors()
+    case Local(n) => n.toInt
+    case master =>
+      val cores = conf.getInt("spark.executor.cores", master match {
+        case LocalCluster(_, c) => c.toInt
+        case _ => Runtime.getRuntime.availableProcessors()
+      })
+      math.max(1, cores / math.max(1, conf.getInt("spark.task.cpus", 1)))
+  }
+
+  /** Configured executor count: one in local mode, local-cluster's worker
+    * count, otherwise `spark.executor.instances` (default 1). */
+  def executors(conf: org.apache.spark.SparkConf): Int = conf.get("spark.master", "") match {
+    case Local(_) => 1
+    case LocalCluster(n, _) => n.toInt
+    case _ => math.max(1, conf.getInt("spark.executor.instances", 1))
   }
 
   /** The executor's on-heap unified pool, the exact arithmetic of
@@ -138,12 +150,22 @@ object TopKBudget {
     * always sum to this constant however the boundary moves; the pool
     * objects themselves are Scala-protected, so the derivation reads the
     * same executor-side inputs the manager was built from):
-    * `spark.memory.fraction × (heap − 300 MB reserved)`. */
-  def unifiedPoolBytes(conf: org.apache.spark.SparkConf): Long = {
-    val systemMemory = conf.getLong("spark.testing.memory", Runtime.getRuntime.maxMemory())
+    * `spark.memory.fraction × (heap − 300 MB reserved)`. `heap` defaults to
+    * this JVM's, which is the executor's when called inside a task. */
+  def unifiedPoolBytes(conf: org.apache.spark.SparkConf,
+                       heap: Long = Runtime.getRuntime.maxMemory()): Long = {
+    val systemMemory = conf.getLong("spark.testing.memory", heap)
     val reserved = conf.getLong("spark.testing.reservedMemory", 300L * 1024 * 1024)
     val fraction = conf.getDouble("spark.memory.fraction", 0.6)
     math.max(0L, ((systemMemory - reserved) * fraction).toLong)
+  }
+
+  /** [[unifiedPoolBytes]] of one executor, derived on the driver: in local
+    * mode the executor is this JVM; elsewhere its heap is
+    * `spark.executor.memory`. */
+  def executorPoolBytes(conf: org.apache.spark.SparkConf): Long = conf.get("spark.master", "") match {
+    case Local(_) => unifiedPoolBytes(conf)
+    case _ => unifiedPoolBytes(conf, conf.getSizeAsMb("spark.executor.memory", "1g") << 20)
   }
 
   /** Fail fast on an explicitly configured row budget that cannot fit

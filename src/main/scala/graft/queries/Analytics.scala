@@ -331,9 +331,13 @@ object Analytics {
     * data shape where half the rows fail times exception handling, not the
     * operator — this query originally overflowed on ~50% of rows and cost
     * 15s at sf0.1; the production-shaped carve-outs keep every NULL path
-    * exercised (the gate counts each) at per-row arithmetic cost. */
+    * exercised (the gate counts each) at per-row arithmetic cost.
+    *
+    * No `Spread` before the projection: the try_* arithmetic is too cheap
+    * per row to pay for the exchange (1.18–1.28 s without, 1.48–1.53 s with
+    * at local[4] sf0.1). */
   def fnTry(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Spread.ifNarrow(Tables.lineitem(spark, dir), "l_orderkey")
+    Tables.lineitem(spark, dir)
       .select(col("l_returnflag"),
         // rare zero denominator (double division — the gate counts the NULL
         // path, and a BigDecimal divide per row would dominate the bench)

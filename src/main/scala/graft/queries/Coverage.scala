@@ -130,7 +130,7 @@ object Coverage {
   }
 
   def condCaseCast(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.Spread.ifNarrow(Tables.events(spark, dir), "event_id")
+    graft.operators.Spread(Tables.events(spark, dir), col("event_id"))
       .select(col("event_id"),
         when(col("value") > 20, "high").when(col("value") > 5, "mid").otherwise("low").as("band"),
         col("event_type").try_cast(IntegerType).as("bad_cast"),
@@ -288,17 +288,17 @@ object Coverage {
     val dec38 = DecimalType(38, 0)
     val xc = (dec(col("l_quantity")) * 100).cast(LongType)
     val yc = (dec(col("l_extendedprice"), 14, 2) * 100).cast(LongType)
-    // Round 15 (guide §2.5 conditional floor): the decimal-moment partial
-    // aggregation otherwise runs inside the 3-split scan stage (profiled
-    // 0.84 s with 29 idle cores; PERF_r14 anti-scaling 0.69). The spread is
-    // keyed on high-cardinality l_orderkey so the partial agg above it runs
-    // core-wide; at cluster scale the scan has thousands of splits and
-    // ifNarrow is a structural no-op, so this never becomes the §2.3
-    // shuffle-below-partial-agg anti-pattern where it matters.
-    graft.operators.Spread.ifNarrow(
+    // Round 15 (guide §2.5): the decimal-moment partial aggregation
+    // otherwise runs inside the one-row-group scan, whose 3 byte-splits
+    // leave one task with every row (profiled 0.84 s with 29 idle cores).
+    // The spread is keyed on high-cardinality l_orderkey so the partial agg
+    // above it runs core-wide. It is unconditional: on an already-wide scan
+    // it shuffles the four projected columns below the partial agg (the
+    // guide §2.3 cost), which the split count cannot rule out.
+    graft.operators.Spread(
         Tables.lineitem(spark, dir)
           .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
-            col("l_orderkey")), "l_orderkey")
+            col("l_orderkey")), col("l_orderkey"))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         sum(xc.cast(dec38)).as("sx"), sum(yc.cast(dec38)).as("sy"),
@@ -430,13 +430,13 @@ object Coverage {
       |ORDER BY l_returnflag""".stripMargin
 
   def aggRollup(spark: SparkSession, dir: String): DataFrame = {
-    // Round 15: same conditional floor as aggRegr — the 3x Expand + decimal
-    // partial agg ran inside the 3-split scan stage (PERF_r14 anti-scaling
-    // 0.73); spread by l_orderkey parallelizes it, no-op at cluster scale.
-    graft.operators.Spread.ifNarrow(
+    // Round 15: same spread as aggRegr — the 3x Expand + decimal partial
+    // agg ran inside the one-row-group scan (anti-scaling 0.73 at
+    // local[32]); spread by l_orderkey parallelizes it.
+    graft.operators.Spread(
         Tables.lineitem(spark, dir)
           .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
-            col("l_orderkey")), "l_orderkey")
+            col("l_orderkey")), col("l_orderkey"))
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"), d(sum(dec(col("l_quantity")))).as("sum_qty"),
         grouping(col("l_returnflag")).cast(LongType).as("g_rf"),
@@ -1409,14 +1409,14 @@ object Coverage {
     * per input row, pipelined inside the scan stage), then aggregate.
     * Oracle uses the portable UNION ALL formulation. */
   def aggUnpivot(spark: SparkSession, dir: String): DataFrame =
-    // ifNarrow (round 14): the 4x row expansion + decimal partial agg ran
-    // one-task in the scan stage; the partial aggregation still runs ABOVE
-    // this exchange (per-task reduction to one row per metric), so no
-    // pre-aggregation rows are shuffled that a wide scan would not shuffle
-    graft.operators.Spread.ifNarrow(
+    // Spread (round 14): the 4x row expansion + decimal partial agg ran
+    // one-task in the one-row-group scan. The exchange carries the six
+    // projected columns BEFORE the expansion, so it moves a quarter of the
+    // rows the aggregation reads; the partial agg still runs above it
+    graft.operators.Spread(
         Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
-        "l_orderkey")
+        col("l_orderkey"))
       .unpivot(
         Array(col("l_orderkey"), col("l_linenumber")),
         Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),

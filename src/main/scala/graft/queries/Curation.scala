@@ -64,8 +64,8 @@ object Curation {
     * (no shuffle); the top-gram mass needs occurrence counts, so it is two
     * keyed aggregations — (doc, gram) then (doc) — linear at any scale. */
   def txtQuality(spark: SparkSession, dir: String): DataFrame = {
-    val staged = graft.operators.Spread.ifNarrow(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
+    val staged = graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
       .select(col("doc_id"),
         size(col("t")).cast(LongType).as("n_tokens"),
@@ -119,8 +119,8 @@ object Curation {
     * so counts and the redacted fingerprint are value-checked. Per-row
     * regex work only: codegen'd, shuffle-free, linear at 100 TB. */
   def txtPii(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.operators.Spread.ifNarrow(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
+    val base = graft.operators.Spread(
+      Tables.documents(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
     val id = col("doc_id")
     val aug = concat(col("text"),
       when(id % 3 === 0,
@@ -1243,12 +1243,14 @@ object Curation {
     * docstring bound (N_s·n_t ≤ N_s²); beyond that, rescale to per-million
     * counts before the ratio. */
   def curDsir(spark: SparkSession, dir: String): DataFrame = {
-    // Round 15 note: ifNarrowHeavy was tried here (toks fans out into two
-    // shuffled consumers) and measured flat-to-worse (1.16 -> 1.24-1.53 s
-    // at sf0.1) — unlike txt_lmscore, the normalize+tokenize transform is
-    // heavy per row, so the full-width form stands (driver-verified r14).
-    val toks = graft.operators.Spread.ifNarrow(
-        Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")), "doc_id")
+    // Round 15 note: a memory-bounded width was tried here (toks fans out
+    // into two shuffled consumers) and measured flat-to-worse than full
+    // width (1.16 -> 1.24-1.53 s at sf0.1 on 32 cores): the
+    // normalize+tokenize transform is heavy per row. Spread now has one
+    // width for every site, memory-bounded where memory binds, so at
+    // local[32] on 8 GB this site runs at 12: not yet re-measured there.
+    val toks = graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")), col("doc_id"))
       .select(col("doc_id"), col("lang"),
         explode(TextFunctions.tokens(TextFunctions.normalize(col("text")))).as("tok"))
       .select(col("doc_id"), col("lang"),
@@ -1365,8 +1367,8 @@ object Curation {
     * Pure per-row column arithmetic: no shuffle, no UDF. */
   def txtReadability(spark: SparkSession, dir: String): DataFrame = {
     val norm = TextFunctions.normalize(col("text"))
-    graft.operators.Spread.ifNarrow(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
+    graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         size(TextFunctions.tokens(norm)).cast(LongType).as("n_words"),
         greatest(expr("regexp_count(text, '[.!?]+')"), lit(1L)).as("n_sentences"),

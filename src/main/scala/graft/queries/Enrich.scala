@@ -32,9 +32,9 @@ object Enrich {
     * semi-join with no shuffle; only the per-doc `distinct` is keyed. */
   def txtDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // ifNarrow (round 14): the shingle/hash gram build ran one-task
-    val grams = graft.operators.Spread.ifNarrow(
-        docs.select(col("doc_id"), col("text")), "doc_id")
+    // Spread (round 14): the shingle/hash gram build ran one-task
+    val grams = graft.operators.Spread(
+        docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
       .select(col("doc_id"),
         explode(TextFunctions.shinglesFromTokens(col("t"), DeconK)).as("g"))
@@ -87,9 +87,9 @@ object Enrich {
     * no shuffle, no UDF, no model server. The ordered `aggregate` fold keeps
     * the double sum bit-identical to the oracle's `list_reduce`. */
   def clsQuality(spark: SparkSession, dir: String): DataFrame =
-    // ifNarrow (round 14): per-token md5 scoring ran one-task in the scan
-    graft.operators.Spread.ifNarrow(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
+    // Spread (round 14): per-token md5 scoring ran one-task in the scan
+    graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         TextFunctions.tokens(TextFunctions.normalize(col("text"))).as("t"))
       .select(col("doc_id"),
@@ -187,10 +187,10 @@ object Enrich {
     * extractions with DuckDB's JSON functions — the semantics gate is that
     * variant extraction equals JSON-text extraction. */
   def fnVariant(spark: SparkSession, dir: String): DataFrame =
-    // ifNarrow (round 14): two JSON parses per row ran one-task in the scan
-    graft.operators.Spread.ifNarrow(
+    // Spread (round 14): two JSON parses per row ran one-task in the scan
+    graft.operators.Spread(
         Tables.events(spark, dir).select(col("event_id"), col("event_type"), col("props")),
-        "event_id")
+        col("event_id"))
       .select(col("event_type"),
         // try_parse_json for the REAL payload too: a malformed props row
         // degrades to a NULL variant instead of a JsonParseException

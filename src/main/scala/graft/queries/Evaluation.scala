@@ -248,11 +248,11 @@ object Evaluation {
     // Round 15 (guide §2.5): percentile_disc's partial state buffers every
     // value (no map-side reduction — 3 aggs ≈ 3 copies of the column), so on
     // a single-split scan the whole buffer build ran as one 0.48 s task.
-    // The conditional spread parallelizes it; the shuffled bytes are the
-    // same rows the partial buffers already carried. No-op on wide scans.
-    graft.operators.Spread.ifNarrow(Tables.orders(spark, dir)
+    // The spread parallelizes it; the shuffled bytes are the same rows the
+    // partial buffers already carried.
+    graft.operators.Spread(Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
-        "o_orderkey")
+        col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY o_totalprice)").as("p25"),
         expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)").as("p50"),

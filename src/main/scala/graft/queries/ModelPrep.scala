@@ -75,11 +75,12 @@ object ModelPrep {
     * oracle's sequential list_reduce left fold; a plain SUM would be
     * partition-order-dependent in Spark and segment-tree-shaped in DuckDB. */
   def txtLmScore(spark: SparkSession, dir: String): DataFrame = {
-    // ifNarrowHeavy (round 15): tok2 fans out into four shuffled consumers,
-    // so full core width multiplies each consumer stage's per-task overhead
-    // — width 32 measured 1.18 s vs 0.49 s at width 8 on the same host.
-    val tok = graft.operators.Spread.ifNarrowHeavy(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
+    // Spread (round 15): tok2 fans out into four shuffled consumers, so a
+    // wide spread multiplies each consumer stage's per-task overhead —
+    // width 32 measured 1.18 s vs 0.49 s at width 8 on the same host, so
+    // this site gains from Spread's memory bound where it narrows.
+    val tok = graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"), posexplode(TextFunctions.tokens(col("text"))).as(Seq("p0", "w")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("w"))
     val lagW = Window.partitionBy(col("doc_id")).orderBy(col("pos"))

@@ -513,8 +513,8 @@ object Pipeline {
       .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
       .when(col("s_de") >= col("s_fr"), "de")
       .otherwise("fr")
-    graft.operators.Spread.ifNarrow(
-        Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")), "doc_id")
+    graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")), col("doc_id"))
       .select(col("doc_id") +: col("lang").as("lang_meta") +: scores: _*)
       .withColumn("predicted", predicted)
       .orderBy(col("doc_id"))
@@ -555,11 +555,10 @@ object Pipeline {
   /** Token counting (whitespace + BPE-ish regex) and position-sensitive
     * rolling-hash fingerprints — per-row codegen'd/linear, no shuffle. */
   def txtTokens(spark: SparkSession, dir: String): DataFrame =
-    // ifNarrow (round 14, guide §2.5): the BPE regex + rolling-hash
-    // projection ran one-task inside the single-split scan stage; a no-op
-    // when the scan is already wide
-    graft.operators.Spread.ifNarrow(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id")
+    // Spread (round 14, guide §2.5): the BPE regex + rolling-hash
+    // projection ran one-task inside the single-split scan stage
+    graft.operators.Spread(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("n_ws_tokens"),
         TextFunctions.bpeTokenCount(col("text")).as("n_bpe_tokens"),

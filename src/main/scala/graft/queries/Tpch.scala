@@ -32,11 +32,13 @@ object Tpch {
     * scan → filter → two-phase hash agg (8 groups, tiny shuffle) → sort.
     */
   def q1(spark: SparkSession, dir: String): DataFrame = {
-    // ifNarrow (round 14, guide §2.5): the decimal partial aggregation ran
-    // one-task inside the single-split scan stage; keyed on l_shipdate (a
-    // column the query already reads, so pruning is unchanged); no-op when
-    // the scan is wide. The partial agg still runs above the exchange.
-    val l = graft.operators.Spread.ifNarrow(Tables.lineitem(spark, dir), "l_shipdate")
+    // Spread (round 14, guide §2.5): the decimal partial aggregation ran
+    // one-task inside the one-row-group scan; keyed on l_shipdate (a column
+    // the query already reads, so pruning is unchanged). The partial agg
+    // runs above the exchange, so the seven projected columns shuffle
+    // unreduced; at local[4] sf0.1 the spread still measured faster in 4
+    // of 5 alternating runs (median 1.32 s without, 1.29 s with).
+    val l = graft.operators.Spread(Tables.lineitem(spark, dir), col("l_shipdate"))
     val disc = oneMinus(col("l_discount"))
     val tax = onePlus(col("l_tax"))
     l.filter(col("l_shipdate") <= ts("1998-09-02"))
@@ -205,7 +207,7 @@ object Tpch {
       .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
     val n2 = Tables.nation(spark, dir)
       .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-    // Round 15: r14's Spread.ifNarrow on lineitem reverted here too — it
+    // Round 15: r14's lineitem spread reverted here too — it
     // measured flat on the driver (0.756 s with, same without), and like q9
     // the l_orderkey exchange feeds a broadcast-probe join that derives no
     // benefit from the partitioning.
@@ -286,7 +288,7 @@ object Tpch {
     * p_retailprice as the cost basis). */
   def q9(spark: SparkSession, dir: String): DataFrame = {
     val amount = (rev() - dec(col("p_retailprice")) * dec(col("l_quantity"))).as("amount")
-    // Round 15: the r14 Spread.ifNarrow on lineitem here is REVERTED — the
+    // Round 15: the r14 lineitem spread here is REVERTED — the
     // exchange was keyed on l_orderkey under a p_partkey broadcast-probe
     // join, so no downstream consumer wanted the partitioning and the
     // driver measured 0.75x (the same evidence that reverted q5/q8/q21).

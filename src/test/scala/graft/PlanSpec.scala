@@ -194,14 +194,13 @@ class PlanSpec extends SparkSpec {
 
   test("cls_quality: per-row scoring needs no keyed shuffle") {
     // The computation itself must not REQUIRE a keyed exchange
-    // (ENSURE_REQUIREMENTS). The round-14 Spread.ifNarrow repartition
-    // (REPARTITION_BY_NUM, a no-op on wide scans) is an optional
-    // parallelism floor, not a semantic shuffle, and is allowed.
+    // (ENSURE_REQUIREMENTS). The Spread repartition (REPARTITION_BY_NUM)
+    // is a scan-parallelism floor, not a semantic shuffle, and is allowed.
     val plan = executedPlan("cls_quality")
     val required = plan.linesIterator
       .filter(_.contains("hashpartitioning")).filter(_.contains("ENSURE_REQUIREMENTS"))
     assert(required.isEmpty,
-      "classifier scoring is per-row; only the final sort (and the optional " +
+      "classifier scoring is per-row; only the final sort (and the " +
         "scan-parallelism spread) may exchange:\n" + plan.take(1500))
   }
 

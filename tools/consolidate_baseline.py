@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Fold BENCH_FULL.json into BASELINE.md's per-query table.
+"""Fold a BENCH_FULL_c<cpus>.json sweep into BASELINE.md's per-query table.
 
 Replaces the data rows of the '## Local baseline' table with one row per
 query from the latest full-suite bench, making it the single authoritative
@@ -10,8 +10,10 @@ per-query shuffle bytes and peak task memory, so the table now carries a
 telemetry column pair: host pollution shows up as inflated wall-clock with
 UNCHANGED shuffle bytes, a real plan regression moves both.
 Usage:
-  python3 tools/consolidate_baseline.py
-      full refresh — every row's wall-clock AND telemetry from BENCH_FULL
+  python3 tools/consolidate_baseline.py [--cpus N]
+      full refresh — every row's wall-clock AND telemetry from the sweep
+      at N cores, BENCH_FULL_cN.json (in either mode --cpus may be left
+      out when only one sweep exists)
   python3 tools/consolidate_baseline.py --telemetry-only [--update-times q1,q2]
       keep each existing row's wall-clock ms (the table stays the fastest
       honest isolated sweep — a uniformly slower host must not loosen the
@@ -20,6 +22,7 @@ Usage:
       changed, so their old ms describes retired code and must be replaced.
       Queries absent from the table get full rows either way.
 """
+import glob
 import json
 import re
 import sys
@@ -30,7 +33,15 @@ if "--update-times" in sys.argv:
     update_times = set(
         sys.argv[sys.argv.index("--update-times") + 1].split(","))
 
-bench = json.load(open("BENCH_FULL.json"))
+if "--cpus" in sys.argv:
+    artifact = f"BENCH_FULL_c{sys.argv[sys.argv.index('--cpus') + 1]}.json"
+else:
+    sweeps = sorted(glob.glob("BENCH_FULL_c*.json"))
+    if len(sweeps) != 1:
+        sys.exit(f"pass --cpus N to choose one of {sweeps or 'no'} BENCH_FULL_c*.json sweeps")
+    artifact = sweeps[0]
+cpus = re.search(r"_c(\d+)\.json$", artifact).group(1)
+bench = json.load(open(artifact))
 queries = bench["queries"]
 detail = bench.get("detail", {})
 sf = bench["sf"].rstrip("/").split("sf")[-1]
@@ -53,7 +64,7 @@ def row(name, keep_ms=None):
         tele = f"| {mb:.1f} | {peak:.1f} "
     else:
         tele = "| — | — "
-    conf = "local[32], shuffle.partitions=32, AQE on"
+    conf = f"local[{cpus}], shuffle.partitions={cpus}, AQE on"
     if keep_ms is None and d.get("isolated"):
         conf += "; isolated re-measure"
     return f"| {name} | {sf} | {ms} {tele}| {conf} |\n"
