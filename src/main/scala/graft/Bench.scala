@@ -1,173 +1,48 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Benchmark harness: runs every registered query against
-  * SPARK_GRAFT_SF_DIR, prints one JSON line the driver consumes.
+  * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
   * Each query is forced through the noop sink (full plan executes — unlike
   * count(), which lets Catalyst prune projections), after one warmup run;
-  * the reported time is the median of SPARK_GRAFT_BENCH_ITERS (default 3)
-  * runs, mirroring the reference harness's iterations
+  * the reported time is the in-suite median of SPARK_GRAFT_BENCH_ITERS
+  * (default 3) runs, or of at least 5 when the warm-up took 2 s or more, so
+  * that one slow run cannot move an expensive query's median
   * (reference: benchmarks/src/bin/tpch.rs:353-445).
   *
-  * Two trust mechanisms, both born from two consecutive rounds of
-  * suite-pollution poisoning the committed artifact (ded_contain measured
-  * 29-42 s in the 272-query single-JVM sweep vs 4.2 s isolated, identical
-  * code):
+  * Each run executes under its own job group, and [[JobMetrics]] sums that
+  * group's jobs into the median run's record: jobs, tasks, shuffle
+  * read/write bytes and peak per-task execution memory. Those counts are
+  * deterministic per plan, so an inflated wall-clock with unchanged counts
+  * is host load, not a plan change.
   *
-  *  1. SELF-RECONCILIATION — after the sweep, any query whose in-suite
-  *     median exceeds 2x its BASELINE.md row — or exceeds 1.5x with more
-  *     than half a second of absolute inflation (the round-8 artifact
-  *     showed the pollution also lands as 1.5-1.9x on the expensive
-  *     queries: ded_contain 6.4 s vs 3.8 s baseline stayed under the 2x
-  *     trigger while contributing 2.6 s of the total's drift) — is
-  *     re-measured in isolation
-  *     (suite state cleared, fresh warmup, median of `iters` — minimum
-  *     for sub-second baseline rows); the FASTER of the two figures is
-  *     what BENCH_FULL_c<cpus>.json's `queries` map and the stdout line carry
-  *     (pollution only inflates, and the isolated re-measure can itself
-  *     hit host load — round 8's did), with both raw numbers kept
-  *     side-by-side under `detail`. Round 13: each isolated re-measure is
-  *     PROBE-GATED — the calibration probe runs immediately before it,
-  *     the pass retries (bounded, 15 s apart) while the probe reads hot
-  *     (>1.15x its pin), and the probe time + statistic used land per-row
-  *     in `detail` so the artifact itself proves the conditions each
-  *     reconciled number was taken under. A genuine plan regression
-  *     reproduces in BOTH measurements and stays >2x; host/suite
-  *     pollution does not.
-  *  2. TELEMETRY — per-query shuffle read/write bytes and peak per-task
-  *     execution memory captured via SparkListener. Pollution is then
-  *     diagnosable from the artifact alone: inflated wall-clock with
-  *     unchanged shuffle bytes = load, not a plan change; and a
-  *     scale-killer shows up numerically as shuffle bytes growing faster
-  *     than the data.
+  * Inputs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: this host's
+  * cores), SPARK_GRAFT_BENCH_ITERS and SPARK_GRAFT_ONLY (a comma-separated
+  * subset of query names).
   */
 object Bench {
 
-  /** Accumulates task-level metrics between resets. The listener bus is
-    * async, so [[settle]] polls until the ended-task count stops moving
-    * (bounded) before a snapshot is read — shuffle byte totals are
-    * deterministic per plan, so a settled read is exact. */
-  private final class MetricsListener extends SparkListener {
-    val shuffleRead = new AtomicLong(0L)
-    val shuffleWrite = new AtomicLong(0L)
-    val peakTaskMem = new AtomicLong(0L)
-    val tasks = new AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        peakTaskMem.updateAndGet(p => math.max(p, m.peakExecutionMemory))
-        tasks.incrementAndGet()
-      }
-    }
-    def reset(): Unit = {
-      shuffleRead.set(0L); shuffleWrite.set(0L); peakTaskMem.set(0L); tasks.set(0L)
-    }
-    def settle(): Unit = {
-      var prev = -1L; var stable = 0; var waited = 0
-      while (stable < 2 && waited < 2000) {
-        val cur = tasks.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        Thread.sleep(25); waited += 25
-      }
-    }
+  /** One measured run: wall-clock plus the sums over the jobs it ran. */
+  private[graft] final case class RunStats(sec: Double, jobs: Int, tasks: Long,
+      shuffleRead: Long, shuffleWrite: Long, peakTaskMem: Long)
+
+  private[graft] object RunStats {
+    def apply(sec: Double, js: Seq[JobMetrics.Job]): RunStats =
+      RunStats(sec, js.size, js.map(_.tasks.toLong).sum, js.map(_.shuffleRead).sum,
+        js.map(_.shuffleWrite).sum, js.map(_.peakTaskMem).foldLeft(0L)(math.max))
   }
 
-  /** The reconciliation trigger: in-suite median over 2x its baseline row,
-    * or over 1.5x with more than half a second of absolute inflation (the
-    * expensive-query pollution signature that slips a 2x-only gate). */
-  private[graft] def polluted(sec: Double, base: Double): Boolean =
-    sec > 2 * base || (sec > 1.5 * base && sec - base > 0.5)
-
-  /** One measured execution: wall-clock + the telemetry it generated. */
-  private[graft] final case class RunStats(sec: Double, shuffleRead: Long,
-      shuffleWrite: Long, peakTaskMem: Long)
-
-  /** An isolated (reconciliation) re-measure plus the evidence that makes
-    * it trustworthy from the artifact alone (round 13 — the round-12 sweep
-    * carried 85 reconciliations taken on a loaded host with no per-row
-    * proof of it):
-    *  - `stat`: which statistic the reported run is — "median" normally,
-    *    "min" for sub-second baseline rows (see measure's scaladoc).
-    *  - `probeSec`: host-load calibration probe run IMMEDIATELY before
-    *    this re-measure (min of two warm probe runs; load is additive, so
-    *    the min is the most charitable host reading).
-    *  - `probeAttempts`: re-measures are NOT taken while the probe reads
-    *    hot (> ~1.15x its quiet-host pin) — the pass sleeps and re-probes,
-    *    bounded; this is how many probes it took to get a quiet window.
-    *  - `probeHot`: true when the attempts ran out and the re-measure was
-    *    taken under a hot probe anyway — the number is then explicitly
-    *    low-trust in the artifact itself.
-    *  - `probeAfterSec`: a confirming probe taken after the re-measure,
-    *    only when the result STILL exceeds 2x baseline — brackets the
-    *    measurement window (quiet before + quiet after + >2x = real). */
-  private[graft] final case class Isolated(run: RunStats, stat: String,
-      probeSec: Option[Double], probeAttempts: Int, probeHot: Boolean,
-      probeAfterSec: Option[Double])
-
-  /** Measurement of one query: the in-suite median run, plus — when the
-    * in-suite figure tripped the reconciliation trigger — the isolated
-    * re-measure. `final_` is what downstream consumers should read: the
-    * FASTER of the two runs (in-suite median vs the isolated statistic),
-    * not the isolated one unconditionally.
-    * Both measure the identical plan (telemetry proves it — shuffle bytes
-    * are deterministic per plan) and pollution only ever inflates, so the
-    * lower figure is the least-polluted estimate; the round-8 artifact
-    * showed why unconditional-isolated is wrong (ded_contain 6.1 s
-    * in-suite replaced by a 12.1 s isolated re-measure that itself hit
-    * host load, identical shuffle bytes). */
-  private[graft] final case class QueryResult(inSuite: Option[RunStats],
-      isolated: Option[Isolated]) {
-    def final_ : Option[RunStats] = (inSuite, isolated.map(_.run)) match {
-      case (Some(a), Some(b)) => Some(if (b.sec < a.sec) b else a)
-      case (a, b)             => b.orElse(a)
-    }
-    def finalSec: Double = final_.map(_.sec).getOrElse(-1.0)
-  }
-
-  /** The authoritative per-query envelope: first `| name | 0.1 | ms |` row
-    * per query in BASELINE.md's local-baseline table (later scale-ramp
-    * sections repeat names at other SFs and are skipped by the sf pin).
-    * Seconds; empty when the file is absent or the bench SF isn't 0.1. */
-  private[graft] def parseBaseline(sfDir: String,
-      path: String = "BASELINE.md"): Map[String, Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!sfDir.replaceAll("/+$", "").endsWith("sf0.1") ||
-        !java.nio.file.Files.exists(p)) return Map.empty
-    val row = """^\|\s*([a-z0-9_]+)\s*\|\s*0\.1\s*\|\s*(\d+)\s*\|""".r
-    // BASELINE.md is UTF-8 (prose sections use multibyte glyphs); the
-    // forked JVM's default charset may be ASCII, which throws mid-stream
-    val src = scala.io.Source.fromFile(p.toFile)(scala.io.Codec.UTF8)
-    try src.getLines().foldLeft(Map.empty[String, Double]) { (acc, line) =>
-      row.findFirstMatchIn(line) match {
-        case Some(m) if !acc.contains(m.group(1)) =>
-          acc + (m.group(1) -> m.group(2).toDouble / 1000.0)
-        case _ => acc
-      }
-    } finally src.close()
-  }
-
-  /** Host-load calibration probe (round 11): a FIXED, data-independent
-    * workload — 64M codegen'd xxhash64 folds across 32 tasks (pure CPU,
-    * saturates the cores exactly like a real query's map stage) plus a
-    * 2M-row / 64k-key hash aggregation (exchange + shuffle machinery).
-    * Measured warm (one throwaway, then median of 3). Its quiet-host cost
-    * is PINNED in BASELINE.md ("Calibration probe: N ms at local[32]");
-    * measured/pinned is the sweep's host-load factor. The round-10 driver
-    * sweep measured 5 queries past the 2x gate with byte-identical shuffle
-    * totals to the quiet-host runs — pure host contention, diagnosable
-    * only by cross-referencing older artifacts. With the probe, the
-    * artifact carries its own load context: wall-clock ratios should be
-    * read net of host_factor, and a genuine plan regression shows as a
-    * per-query ratio far above it (shuffle telemetry then tells which).
-    * Probe times are NOT used to rescale any reported figure — `queries`
-    * stays raw; the factor is context, not correction. */
+  /** Host-load calibration probe: a fixed, data-independent workload —
+    * 64M codegen'd xxhash64 folds across 32 tasks (pure CPU, saturates the
+    * cores like a real query's map stage) plus a 2M-row / 64k-key hash
+    * aggregation (exchange + shuffle machinery). It runs at the start and
+    * the end of each sweep and its raw seconds land in the artifact, so a
+    * sweep carries its own load context. Probe times rescale nothing, and
+    * are compared only with sweeps at the same core count. */
   private[graft] def probeOnce(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{col, lit, pmod, sum, xxhash64}
     val t0 = System.nanoTime()
@@ -189,288 +64,91 @@ object Bench {
     Seq.fill(3)(probeOnce(spark)).sorted.apply(1)
   }
 
-  /** Pinned quiet-host probe cost: the `Calibration probe: N ms` line in
-    * BASELINE.md (valid for local[32] sweeps). None when absent. */
-  private[graft] def pinnedCalibration(path: String = "BASELINE.md"): Option[Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return None
-    val row = """Calibration probe:\s*(\d+)\s*ms""".r
-    val src = scala.io.Source.fromFile(p.toFile)(scala.io.Codec.UTF8)
-    try src.getLines().collectFirst {
-      case l if row.findFirstMatchIn(l).isDefined =>
-        row.findFirstMatchIn(l).get.group(1).toDouble / 1000.0
-    } finally src.close()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
-    graft.queries.SourcesDdl.cleanStaleScratch()
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-
-    // optional subset (comma-separated names), same contract as Verify —
-    // used by the local scale-ramp run; the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val baseline = parseBaseline(sfDir)
-    val calibPinned = pinnedCalibration().filter(_ => cpus == "32")
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus)
+    graft.queries.SourcesDdl.cleanStaleScratch()
+    val metrics = JobMetrics.attach(spark.sparkContext)
     val calibStart = calibrate(spark)
 
-    // State hygiene between queries: ddl_cache leaves a table cached and the
-    // iterative graph/clustering queries localCheckpoint RDD blocks that are
-    // never unpersisted. In a 270+-query single-JVM sweep, everything that
-    // runs after them sees storage-memory pressure (judge measured q3 9.7s
-    // in-suite vs 1.5s isolated). Clear both after every query so per-query
-    // times reflect the plan, not the suite order.
-    def clearSuiteState(): Unit = {
+    // ddl_cache leaves a table cached and the iterative queries leave
+    // localCheckpoint blocks that are never unpersisted; in a 272-query
+    // single-JVM sweep everything after them would run under storage-memory
+    // pressure (q3 once measured 9.7 s in-suite vs 1.5 s alone). Dropped
+    // after every run.
+    def dropCached(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
+    // Once per query, before its warm-up: a GC lets ContextCleaner release
+    // the previous query's shuffle files and broadcasts.
+    def clearSuiteState(): Unit = { dropCached(); System.gc() }
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): RunStats = {
-      listener.reset()
+    def runOnce(group: String, fn: (SparkSession, String) => DataFrame): RunStats = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, group)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      finally sc.clearJobGroup()
       val sec = (System.nanoTime() - t0) / 1e9
-      listener.settle()
-      RunStats(sec, listener.shuffleRead.get, listener.shuffleWrite.get,
-        listener.peakTaskMem.get)
+      dropCached()
+      RunStats(sec, metrics.jobs(Some(group)))
     }
 
-    /** warmup (plan + codegen + file-footer caches) then median-of-n;
-      * telemetry is the median-time run's. `useMin` (reconciliation of
-      * sub-second rows only) reports the fastest run instead: those rows
-      * sit below the calibration-probe floor, where scheduling noise —
-      * strictly additive — dominates the median even isolated (round 11:
-      * agg_mode reconciled to 0.82 s on a loaded host vs its 0.37 s
-      * quiet-host pin, byte-identical shuffle bytes). The minimum is the
-      * least-polluted honest repro, and a real plan regression raises the
-      * minimum too — with moved telemetry to prove it. */
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                n: Int, useMin: Boolean = false): Option[RunStats] =
+    /** Warm-up (plan + codegen + file-footer caches), then the median run;
+      * None, with the error on stderr, when the query fails. */
+    def measure(name: String, fn: (SparkSession, String) => DataFrame): Option[RunStats] =
       try {
-        runOnce(fn)
         clearSuiteState()
-        val runs = (1 to n).map { _ =>
-          val r = runOnce(fn); clearSuiteState(); r
-        }.sortBy(_.sec)
-        Some(if (useMin) runs.head else runs(runs.length / 2))
-      } catch { case _: Throwable => None }
+        metrics.reset()
+        val n = if (runOnce(s"bench:$name:warmup", fn).sec >= 2.0) math.max(iters, 5) else iters
+        val runs = (1 to n).map(i => runOnce(s"bench:$name:$i", fn)).sortBy(_.sec)
+        Some(runs(runs.length / 2))
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          None
+      }
 
-    // The expensive queries (baseline row >= 2 s) are exactly the ones a
-    // transient host-load spike can push past the reconciliation trigger —
-    // ded_contain tripped it four rounds running on an unchanged plan. A
-    // median over 5 runs instead of 3 needs 2 polluted runs (not 1) to
-    // drift, at a cost of a few extra minutes on <10 queries.
-    def itersFor(name: String): Int =
-      if (baseline.get(name).exists(_ >= 2.0)) math.max(iters, 5) else iters
-
-    val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => (name, fn, measure(fn, itersFor(name))) }
-
-    // Reconciliation pass: isolated re-measure of every >2x-of-baseline
-    // query, AFTER the whole sweep (so the re-run doesn't inherit its
-    // neighbors' JVM state) with a GC between queries. Round 13: each
-    // re-measure is gated on a fresh calibration probe — a number taken
-    // while the probe reads hot would be exactly the low-trust artifact
-    // the reconciliation exists to prevent (the r12 sweep took 85 of them;
-    // win_rdistinct reported 3.51 s against a 0.38 s pin on identical
-    // shuffle bytes). The probe evidence lands per-row in `detail`.
-    val probeLimit = calibPinned.map(_ * 1.15)
-    // Validated/clamped to >= 1: a bare .toInt crashed on non-numeric
-    // values, and <= 0 skipped the probe loop entirely while the row was
-    // still recorded probe_hot=true with no probe_sec — an artifact
-    // claiming a hot measurement that was never probed (ADVICE r13).
-    val maxProbeAttempts = math.max(1,
-      sys.env.get("SPARK_GRAFT_PROBE_ATTEMPTS").flatMap(_.toIntOption).getOrElse(4))
-    // Round 14: the whole reconciliation pass runs under a global
-    // wall-clock budget. Probe-gating's worst case is unbounded (up to
-    // 4x15 s of sleeps PER hot row, and a loaded host makes MORE rows trip
-    // the trigger — compounding), which is how the round-13 driver sweep
-    // outran its window and returned rc:124/parsed:null. When the budget
-    // runs out, remaining flagged rows keep their in-suite figure and are
-    // marked "skipped":"reconcile_budget" in detail — an unreconciled but
-    // PARSABLE artifact beats a perfect one the driver never sees.
-    val reconcileBudgetSec = math.max(0,
-      sys.env.get("SPARK_GRAFT_RECONCILE_BUDGET_SEC").flatMap(_.toIntOption).getOrElse(900))
-    val reconcileDeadline = System.nanoTime() + reconcileBudgetSec * 1000000000L
-    def budgetLeftSec: Double = (reconcileDeadline - System.nanoTime()) / 1e9
-
-    /** Probe-gated isolated re-measure. Probes (min of 2 warm runs) until
-      * the host reads quiet or attempts run out, sleeping 15 s between
-      * tries (never sleeping past the global reconcile budget); then
-      * measures. If the result still exceeds 2x baseline, a confirming
-      * probe brackets the window. */
-    def reconcile(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Isolated] = {
-      val useMin = baseline.get(name).exists(_ < 1.0)
-      var attempt = 0
-      var probe = Double.NaN
-      var hot = true
-      while (hot && attempt < maxProbeAttempts && (attempt == 0 || budgetLeftSec > 20)) {
-        if (attempt > 0) Thread.sleep(15000)
-        attempt += 1
-        probe = math.min(probeOnce(spark), probeOnce(spark))
-        hot = probeLimit.exists(probe > _)
-        if (hot) System.err.println(f"[bench] $name: probe $probe%.3f s hot " +
-          f"(limit ${probeLimit.get}%.3f s), attempt $attempt/$maxProbeAttempts")
-      }
-      measure(fn, itersFor(name), useMin).map { r =>
-        val probeAfter =
-          if (baseline.get(name).exists(b => r.sec > 2 * b))
-            Some(math.min(probeOnce(spark), probeOnce(spark)))
-          else None
-        Isolated(r, if (useMin) "min" else "median",
-          Some(probe).filterNot(_.isNaN), attempt, hot, probeAfter)
-      }
-    }
-
-    // --- Result state + artifact rendering. Mutable and flushed eagerly:
-    // the round-13 driver sweep was killed (rc:124) before Bench ever
-    // reached its single end-of-run write, losing the ENTIRE sweep. Now
-    // (a) the artifact + a provisional stdout line land right after the
-    // in-suite phase, BEFORE any reconciliation; (b) every reconciled row
-    // re-flushes the artifact; (c) a shutdown hook flushes artifact +
-    // stdout on SIGTERM (the `timeout` signal), so a kill at ANY point
-    // after the sweep degrades to a parsable artifact, never to nothing.
-    val resultMap = new java.util.concurrent.ConcurrentHashMap[String, QueryResult]()
-    sweep.foreach { case (name, _, inSuite) =>
-      resultMap.put(name, QueryResult(inSuite, None))
-    }
-    val skippedBudget = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    @volatile var phase = "provisional"
-    @volatile var calibEndOpt: Option[Double] = None
-    @volatile var finalEmitted = false
-
-    def resultsNow: Seq[(String, QueryResult)] =
-      sweep.map { case (name, _, _) => name -> resultMap.get(name) }
+      .map { case (name, fn) => name -> measure(name, fn) }
+    val calibEnd = calibrate(spark)
+    spark.stop()
 
     def fmt(v: Double): String =
       if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-    // headline factor = the WORSE of the observed probes vs the pinned
-    // quiet-host cost — "this sweep saw host load up to X"; both raw
-    // probe times land in the artifact for the time-varying case
-    def hostFactor: Option[Double] =
-      calibPinned.map(p => math.max(calibStart, calibEndOpt.getOrElse(calibStart)) / p)
-    def calibJson: String = {
-      val f = hostFactor.map(fmt).getOrElse("null")
-      val p = calibPinned.map(fmt).getOrElse("null")
-      val e = calibEndOpt.map(fmt).getOrElse("null")
-      s"""{"start_sec":${fmt(calibStart)},"end_sec":$e,"pinned_sec":$p,"host_factor":$f}"""
+    def sec(r: Option[RunStats]): Double = r.fold(-1.0)(_.sec)
+    val total = results.flatMap(_._2).map(_.sec).sum
+    def line(rs: Seq[(String, Option[RunStats])], extra: String): String = {
+      val qs = rs.sortBy(_._1).map { case (k, r) => s""""$k":${fmt(sec(r))}""" }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.length},""" +
+        s""""cpus":$cpus,"calibration":{"start_sec":${fmt(calibStart)},"end_sec":${fmt(calibEnd)}},""" +
+        s"""$extra"queries":$qs,"sf":"$sfDir"}"""
     }
-
-    // The driver retains only the last 2000 chars of stdout ("tail") and
-    // parses the JSON line out of that buffer — at 180+ queries a
-    // full-precision map is ~4KB and truncates, so BENCH_r{3,4}.json came
-    // back parsed:null. Two outputs instead: the complete map (plus
-    // in-suite/isolated/telemetry detail) goes to BENCH_FULL_c<cpus>.json (cwd =
-    // repo root; round-end auto-commit picks it up), and stdout carries a
-    // line capped to fit the tail, keeping every failed query (-1 sentinel)
-    // plus the most expensive ones — the entries the baseline comparison
-    // actually needs. Both carry the final (faster of in-suite median vs
-    // isolated statistic — see QueryResult) figure.
-    def jsonLine(rs: Seq[(String, QueryResult)], extra: String): String = {
-      val all = resultsNow
-      val total = all.collect { case (_, q) if q.finalSec >= 0 => q.finalSec }.sum
-      val nReconciled = all.count(_._2.isolated.nonEmpty)
-      val qs = rs.sortBy(_._1).map { case (k, q) => "\"" + k + "\":" + fmt(q.finalSec) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${all.length},"reconciled":$nReconciled,"phase":"$phase","host_factor":${hostFactor.map(fmt).getOrElse("null")},$extra"queries":$qs,"sf":"$sfDir"}"""
-    }
-    def detailJson: String = resultsNow.sortBy(_._1).map { case (k, q) =>
-      def stats(o: Option[RunStats], extra: String = ""): String = o match {
-        case Some(r) =>
-          s"""{"sec":${fmt(r.sec)},"shuffle_read":${r.shuffleRead},"shuffle_write":${r.shuffleWrite},"peak_task_mem":${r.peakTaskMem}$extra}"""
-        case None => "null"
+    val detail = results.map { case (k, r) =>
+      s""""$k":""" + r.fold("null") { s =>
+        s"""{"sec":${fmt(s.sec)},"jobs":${s.jobs},"tasks":${s.tasks},"shuffle_read":${s.shuffleRead},""" +
+          s""""shuffle_write":${s.shuffleWrite},"peak_task_mem":${s.peakTaskMem}}"""
       }
-      def isoStats(o: Option[Isolated]): String = o match {
-        case Some(i) =>
-          val probe = i.probeSec.map(p => s""","probe_sec":${fmt(p)}""").getOrElse("")
-          val after = i.probeAfterSec.map(p => s""","probe_after_sec":${fmt(p)}""").getOrElse("")
-          stats(Some(i.run),
-            s""","stat":"${i.stat}"$probe,"probe_attempts":${i.probeAttempts},"probe_hot":${i.probeHot}$after""")
-        case None if skippedBudget.contains(k) => """{"skipped":"reconcile_budget"}"""
-        case None => "null"
-      }
-      "\"" + k + "\":{\"in_suite\":" + stats(q.inSuite) +
-        ",\"isolated\":" + isoStats(q.isolated) + "}"
     }.mkString("{", ",", "}")
 
-    // only full-surface runs own the committed artifact, one per core count
-    // so sweeps at different widths never overwrite each other — a
-    // SPARK_GRAFT_ONLY subset run (scale ramps, spot checks) must not
-    // clobber it; its detail (shuffle/peak-mem telemetry) still lands in
-    // BENCH_SUBSET.json so a plan change can re-pin its BASELINE.md row
-    // without a full sweep
+    // One committed artifact per core count, so sweeps at different widths
+    // never overwrite each other; a SPARK_GRAFT_ONLY subset run writes
+    // BENCH_SUBSET.json instead and leaves the sweep alone.
     val artifact = if (only.isEmpty) s"BENCH_FULL_c$cpus.json" else "BENCH_SUBSET.json"
-    def writeArtifact(): Unit =
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(artifact),
-        jsonLine(resultsNow,
-          "\"cpus\":" + cpus + ",\"reconcile_budget_sec\":" + reconcileBudgetSec +
-            ",\"reconcile_skipped\":" + skippedBudget.size +
-            ",\"calibration\":" + calibJson + ",\"detail\":" + detailJson + ",") + "\n")
-    def stdoutLine(): String = {
-      val budget = 1800
-      // failures first (always visible), then descending cost
-      val prio = resultsNow.sortBy { case (_, q) => (q.finalSec >= 0, -q.finalSec) }
-      var kept = prio
-      while (jsonLine(kept, s""""full":"$artifact",""").length > budget && kept.nonEmpty)
-        kept = kept.dropRight(1)
-      jsonLine(kept, s""""full":"$artifact",""")
-    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact),
+      line(results, s""""detail":$detail,""") + "\n")
 
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      if (!finalEmitted) {
-        try {
-          writeArtifact()
-          println(stdoutLine())
-          System.out.flush()
-        } catch { case _: Throwable => () }
-      }))
-
-    // Provisional flush: a timeout anywhere in the reconciliation pass now
-    // degrades to this unreconciled-but-parsable artifact + stdout line.
-    writeArtifact()
-    println(stdoutLine())
-    System.out.flush()
-
-    val flaggedNames = sweep.collect {
-      case (name, _, Some(r)) if baseline.get(name).exists(polluted(r.sec, _)) => name
-    }.toSet
-    if (flaggedNames.nonEmpty) {
-      System.err.println(s"[bench] reconciling ${flaggedNames.size} queries " +
-        "over trigger (>2x baseline, or >1.5x with >0.5s absolute inflation) in-suite: " +
-        flaggedNames.toSeq.sorted.mkString(", ") +
-        f"; budget $reconcileBudgetSec s")
-      clearSuiteState()
-    }
-    phase = "reconciling"
-    sweep.foreach { case (name, fn, _) =>
-      if (flaggedNames.contains(name)) {
-        if (budgetLeftSec <= 0) {
-          skippedBudget.add(name)
-          System.err.println(s"[bench] $name: reconcile budget exhausted, keeping in-suite figure")
-        } else {
-          System.gc()
-          reconcile(name, fn).foreach { iso =>
-            resultMap.put(name, QueryResult(resultMap.get(name).inSuite, Some(iso)))
-          }
-        }
-        writeArtifact()
-      }
-    }
-
-    phase = "reconciled"
-    calibEndOpt = Some(calibrate(spark))
-    writeArtifact()
-    println(stdoutLine())
-    finalEmitted = true
-    spark.stop()
+    // Stdout is read from a 2000-character tail, and the full map is ~4 KB:
+    // keep failures (-1) first, then the most expensive queries, up to 1800.
+    var kept = results.sortBy { case (_, r) => (r.nonEmpty, -sec(r)) }
+    while (line(kept, s""""full":"$artifact",""").length > 1800 && kept.nonEmpty)
+      kept = kept.dropRight(1)
+    println(line(kept, s""""full":"$artifact","""))
   }
 }

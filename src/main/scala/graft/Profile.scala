@@ -1,57 +1,25 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-
 /** Per-job profiler for local optimization work (guide §1: measure first).
   *
   * Runs one or more registered queries through the noop sink (after one
-  * warmup) and prints every Spark job the run launched — wall-clock, task
-  * count, and stage-level shuffle bytes — so the cost of an iterative
-  * operator can be attributed to its rounds instead of guessed at.
+  * warmup) and prints every Spark job the run launched, as [[JobMetrics]]
+  * recorded it — wall-clock, tasks, shuffle bytes, peak task memory and
+  * executor run time — so the cost of an iterative operator can be
+  * attributed to its rounds instead of guessed at.
   *
   * Usage: runMain graft.Profile <sfDir> <query>[,<query>...]
-  * Not part of the driver contract; Bench remains the timing authority.
+  * (SPARK_GRAFT_CPUS, default this host's cores). Bench remains the timing
+  * authority.
   */
 object Profile {
 
-  private final case class JobRow(id: Int, sec: Double, tasks: Int,
-      shufRead: Long, shufWrite: Long, desc: String)
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus)
     graft.queries.SourcesDdl.cleanStaleScratch()
-
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
-    val rows = new ConcurrentLinkedQueue[JobRow]()
-    val stageShuf = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    val jobStages = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        starts.put(js.jobId, (System.nanoTime(), desc, js.stageInfos.map(_.numTasks).sum))
-        jobStages.put(js.jobId, js.stageIds)
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null)
-          stageShuf.put(sc.stageInfo.stageId,
-            (m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(je.jobId)).foreach { case (t0, desc, tasks) =>
-          val (r, w) = jobStages.getOrDefault(je.jobId, Nil)
-            .flatMap(s => Option(stageShuf.get(s)))
-            .foldLeft((0L, 0L)) { case ((ar, aw), (sr, sw)) => (ar + sr, aw + sw) }
-          rows.add(JobRow(je.jobId, (System.nanoTime() - t0) / 1e9, tasks, r, w, desc))
-        }
-      }
-    })
+    val metrics = JobMetrics.attach(spark.sparkContext)
 
     names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -59,18 +27,19 @@ object Profile {
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      Thread.sleep(300)
-      rows.clear()
+      val group = s"profile:$name"
+      metrics.reset()
+      spark.sparkContext.setJobGroup(group, group)
       val t0 = System.nanoTime()
-      spark.sparkContext.setJobDescription(s"profile:$name")
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener settle
-      val js = rows.asScala.toSeq.sortBy(_.id)
+      spark.sparkContext.clearJobGroup()
+      val js = metrics.jobs(Some(group))
       println(f"==== $name%s: ${total}%.3f s, ${js.size}%d jobs ====")
       js.foreach { j =>
         println(f"  job ${j.id}%4d ${j.sec}%7.3f s ${j.tasks}%5d tasks " +
-          f"shufR ${j.shufRead / 1e6}%8.2f MB shufW ${j.shufWrite / 1e6}%8.2f MB  ${j.desc.take(60)}%s")
+          f"shufR ${j.shuffleRead / 1e6}%8.2f MB shufW ${j.shuffleWrite / 1e6}%8.2f MB " +
+          f"peak ${j.peakTaskMem / 1e6}%8.2f MB run ${j.runMs / 1e3}%7.3f s")
       }
       println(f"  jobs-sum ${js.map(_.sec).sum}%.3f s (gaps = driver/planning time)")
     }

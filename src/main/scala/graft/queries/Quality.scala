@@ -266,7 +266,7 @@ object Quality {
     * check ingest pipelines run before promoting a new batch. Baseline =
     * even event ids, candidate = odd (a deterministic stand-in for
     * version N vs N+1). Each event_type's `value` distribution is binned
-    * into 10 fixed-width buckets over the BASELINE's [min, max] (clamped,
+    * into 10 fixed-width buckets over the baseline's [min, max] (clamped,
     * so outliers land in the edge bins), and drift is scored with the
     * chi-square statistic Σ (o − e)² / e with add-one smoothing — chosen
     * over PSI/KL precisely because it needs NO logarithm: every term is

@@ -1,104 +1,68 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.CountDownLatch
 
-/** The bench harness's baseline parser feeds the self-reconciliation gate
-  * (in-suite median >2x the BASELINE.md row triggers an isolated
-  * re-measure) — a parser that silently returns an empty map would turn
-  * reconciliation off without any visible failure, so it gets its own
-  * spec. */
-class BenchSpec extends AnyFunSuite {
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
-  private def withBaseline(content: String)(f: String => Unit): Unit = {
-    val p = java.nio.file.Files.createTempFile("baseline", ".md")
-    try {
-      java.nio.file.Files.writeString(p, content)
-      f(p.toString)
-    } finally java.nio.file.Files.deleteIfExists(p)
+/** The job-metrics recorder that Bench and Profile read: a query's record
+  * must be exact as soon as the action returns (the listener bus is
+  * asynchronous, so this needs the drain, not a sleep), and must hold only
+  * the jobs of its own job group. */
+class BenchSpec extends SparkSpec {
+
+  private def withMetrics[T](f: JobMetrics => T): T = {
+    val metrics = JobMetrics.attach(spark.sparkContext)
+    try f(metrics) finally metrics.detach()
   }
 
-  private val table =
-    """# BASELINE
-      |
-      || query | sf | wall-clock ms (median of 3) | spark conf |
-      ||---|---|---|---|
-      || agg_approx | 0.1 | 851 | local[32], shuffle.partitions=32, AQE on |
-      || ded_contain | 0.1 | 3810 | local[32], shuffle.partitions=32, AQE on |
-      |
-      |## scale ramp (must not override the 0.1 rows)
-      |
-      || query | sf | wall-clock ms | spark conf |
-      ||---|---|---|---|
-      || ded_contain | 1 | 12000 | local[32] |
-      |""".stripMargin
+  private def inGroup[T](group: String)(body: => T): T = {
+    spark.sparkContext.setJobGroup(group, group)
+    try body finally spark.sparkContext.clearJobGroup()
+  }
 
-  test("parses first sf0.1 row per query, in seconds") {
-    withBaseline(table) { path =>
-      val b = Bench.parseBaseline("/root/testdata/sf0.1", path)
-      assert(b == Map("agg_approx" -> 0.851, "ded_contain" -> 3.810))
+  /** One job of two stages: 3 map tasks write the shuffle, 2 reduce tasks read it. */
+  private def twoStageJob(): Unit =
+    spark.sparkContext.parallelize(1 to 1000, 3).map(i => (i % 7, 1L)).reduceByKey(_ + _, 2)
+      .collect()
+
+  test("a two-stage job's record is exact right after the action, with no sleep") {
+    withMetrics { metrics =>
+      val r = inGroup("bench:two-stage") {
+        twoStageJob()
+        Bench.RunStats(1.0, metrics.jobs(Some("bench:two-stage")))
+      }
+      assert(r.jobs == 1 && r.tasks == 5, r)
+      assert(r.shuffleWrite > 0 && r.shuffleRead > 0, r)
     }
   }
 
-  test("trailing slash on the sf dir still pins sf0.1") {
-    withBaseline(table) { path =>
-      assert(Bench.parseBaseline("/root/testdata/sf0.1//", path).nonEmpty)
+  test("jobs of a previous job group are not counted in the next run's record") {
+    withMetrics { metrics =>
+      val started = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      BenchSpec.started = started; BenchSpec.release = release
+      // a job of the previous run that is still running when the next starts
+      val previous = Future(inGroup("bench:q:1") {
+        spark.sparkContext.parallelize(Seq(1), 1).map { x =>
+          BenchSpec.started.countDown(); BenchSpec.release.await(); x
+        }.collect()
+      })
+      try {
+        assert(started.await(60, SECONDS), "the previous run's job never started")
+        metrics.reset()
+        inGroup("bench:q:2")(twoStageJob())
+      } finally release.countDown()
+      Await.result(previous, 60.seconds)
+      assert(metrics.jobs().map(_.group).sorted == Seq("bench:q:1", "bench:q:2"))
+      assert(metrics.jobs(Some("bench:q:2")).map(_.tasks) == Seq(5))
     }
   }
+}
 
-  test("non-0.1 bench SF disables reconciliation (empty envelope)") {
-    withBaseline(table) { path =>
-      assert(Bench.parseBaseline("/root/testdata/sf0.01", path).isEmpty)
-      assert(Bench.parseBaseline("/tmp/sf1", path).isEmpty)
-    }
-  }
-
-  test("missing baseline file yields an empty envelope, not a crash") {
-    assert(Bench.parseBaseline("/root/testdata/sf0.1", "/nonexistent/BASELINE.md").isEmpty)
-  }
-
-  test("the committed BASELINE.md parses to a full envelope") {
-    val b = Bench.parseBaseline("/root/testdata/sf0.1", "BASELINE.md")
-    assert(b.size > 200, s"expected one row per gated query, got ${b.size}")
-    assert(b.values.forall(v => v > 0 && v < 120), "rows are positive seconds under 2 min")
-  }
-
-  test("pinned calibration parses the probe line in seconds") {
-    withBaseline(table + "\nCalibration probe: 700 ms at local[32].\n") { path =>
-      assert(Bench.pinnedCalibration(path).contains(0.7))
-    }
-    // absent line / absent file -> None (factor reported null, never a crash)
-    withBaseline(table) { path => assert(Bench.pinnedCalibration(path).isEmpty) }
-    assert(Bench.pinnedCalibration("/nonexistent/BASELINE.md").isEmpty)
-  }
-
-  test("the committed BASELINE.md pins a calibration probe cost") {
-    val c = Bench.pinnedCalibration("BASELINE.md")
-    assert(c.exists(v => v > 0.05 && v < 10), s"probe pin missing or implausible: $c")
-  }
-
-  test("the reconciliation trigger fires at >2x, or >1.5x with >0.5s inflation") {
-    assert(Bench.polluted(2.1, 1.0))    // plain 2x breach
-    assert(Bench.polluted(1.9, 1.0))    // 1.9x with 0.9s inflation — the widened arm
-    assert(Bench.polluted(6.4, 3.81))   // round-8 ded_contain: 1.68x, +2.6s — must fire
-    assert(!Bench.polluted(1.4, 1.0))   // under both arms
-    assert(!Bench.polluted(1.6, 1.2))   // 1.33x — ratio arm not met despite +0.4s
-    assert(!Bench.polluted(0.35, 0.2))  // cheap query, 1.75x but only +0.15s absolute
-    assert(Bench.polluted(0.45, 0.2))   // cheap query past plain 2x still fires
-  }
-
-  // Reconciliation reports the FASTER of the in-suite and isolated medians:
-  // both measure the identical plan and pollution only inflates, so taking
-  // the isolated figure unconditionally lets a polluted RE-MEASURE replace a
-  // clean in-suite number (round 8: ded_contain 6.1s in-suite → 12.1s
-  // isolated, identical shuffle bytes).
-  test("final figure is the faster of in-suite and isolated medians") {
-    def rs(sec: Double) = Bench.RunStats(sec, 1L, 2L, 3L)
-    def iso(sec: Double) =
-      Bench.Isolated(rs(sec), "median", Some(0.7), 1, probeHot = false, None)
-    assert(Bench.QueryResult(Some(rs(6.1)), Some(iso(12.1))).finalSec == 6.1)
-    assert(Bench.QueryResult(Some(rs(29.3)), Some(iso(4.2))).finalSec == 4.2)
-    assert(Bench.QueryResult(Some(rs(1.0)), None).finalSec == 1.0)
-    assert(Bench.QueryResult(None, Some(iso(2.0))).finalSec == 2.0)
-    assert(Bench.QueryResult(None, None).finalSec == -1.0)
-  }
+object BenchSpec {
+  // tasks run in this JVM (local mode) and reach the latches through here
+  @volatile var started = new CountDownLatch(0)
+  @volatile var release = new CountDownLatch(0)
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import graft.operators.{Clustering, GraphOps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,6 +10,8 @@ import org.apache.spark.sql.functions._
   * cap, and the number of Spark jobs a loop runs (every truncation is an
   * eager checkpoint job and every convergence test a probe job, so a count
   * that moves means a checkpoint, probe or count was added or dropped).
+  * The counts come from [[JobMetrics]], so this is a check of the recorder
+  * too.
   */
 class LoopJobsSpec extends SparkSpec {
 
@@ -40,30 +39,10 @@ class LoopJobsSpec extends SparkSpec {
     }
   }
 
-  /** Jobs started by `body`, counted by a listener between two marker
-    * jobs: the listener bus delivers events in order, so once the end
-    * marker's start event arrives every job `body` ran has been seen. */
+  /** Jobs run by `body`, as the job-metrics recorder counts them. */
   private def jobsOf(body: => Any): Int = {
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.put(Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def marker(tag: String): Int = {
-      sc.setJobGroup(tag, tag, false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
-        .map(g => Option(g).getOrElse(fail(s"listener never saw marker job $tag")))
-        .takeWhile(_ != tag).size
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("loop-jobs-start")
-      body
-      marker("loop-jobs-end")
-    } finally sc.removeSparkListener(listener)
+    val metrics = JobMetrics.attach(spark.sparkContext)
+    try { body; metrics.jobs().size } finally metrics.detach()
   }
 
   test("loop job counts: no added checkpoint, probe or count job") {

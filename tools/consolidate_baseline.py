@@ -4,22 +4,22 @@
 Replaces the data rows of the '## Local baseline' table with one row per
 query from the latest full-suite bench, making it the single authoritative
 per-query reference point (the 2x envelope is then checkable for the whole
-surface). The bench emits reconciled figures (any query >2x its previous
-baseline row in-suite is re-measured isolated; see Bench.scala) plus
-per-query shuffle bytes and peak task memory, so the table now carries a
-telemetry column pair: host pollution shows up as inflated wall-clock with
-UNCHANGED shuffle bytes, a real plan regression moves both.
+surface). The bench reports each query's in-suite median plus its jobs,
+tasks, shuffle bytes and peak task memory (see Bench.scala), so the table
+carries a telemetry column pair: host load shows up as inflated wall-clock
+with UNCHANGED shuffle bytes, a real plan regression moves both.
 Usage:
   python3 tools/consolidate_baseline.py [--cpus N]
       full refresh — every row's wall-clock AND telemetry from the sweep
       at N cores, BENCH_FULL_cN.json (in either mode --cpus may be left
       out when only one sweep exists)
   python3 tools/consolidate_baseline.py --telemetry-only [--update-times q1,q2]
-      keep each existing row's wall-clock ms (the table stays the fastest
-      honest isolated sweep — a uniformly slower host must not loosen the
-      2x reconciliation envelope); only fill the telemetry columns from
-      the latest sweep. --update-times lists queries whose IMPLEMENTATION
-      changed, so their old ms describes retired code and must be replaced.
+      keep each existing row's wall-clock ms (a uniformly slower host must
+      not loosen the table); only fill the telemetry columns from the
+      latest sweep. A kept ms must have been taken at the sweep's core
+      count: the script exits when a kept row's conf column names another
+      local[N]. --update-times lists queries whose IMPLEMENTATION changed,
+      so their old ms describes retired code and must be replaced.
       Queries absent from the table get full rows either way.
 """
 import glob
@@ -44,6 +44,9 @@ cpus = re.search(r"_c(\d+)\.json$", artifact).group(1)
 bench = json.load(open(artifact))
 queries = bench["queries"]
 detail = bench.get("detail", {})
+if any(d and "in_suite" in d for d in detail.values()):
+    sys.exit(f"{artifact} holds the retired in_suite/isolated detail records; "
+             "fold a sweep taken since Bench reports flat records")
 sf = bench["sf"].rstrip("/").split("sf")[-1]
 
 HEADER = ("| query | sf | wall-clock ms (median of 3, noop sink, after warmup)"
@@ -55,9 +58,7 @@ def row(name, keep_ms=None):
     v = queries[name]
     ms = keep_ms if keep_ms is not None else (
         "-1" if v < 0 else str(int(round(v * 1000))))
-    d = detail.get(name) or {}
-    # the stats of whichever run produced the reported figure
-    stats = d.get("isolated") or d.get("in_suite") or {}
+    stats = detail.get(name) or {}
     if stats:
         mb = (stats["shuffle_read"] + stats["shuffle_write"]) / 1e6
         peak = stats["peak_task_mem"] / 1e6
@@ -65,8 +66,6 @@ def row(name, keep_ms=None):
     else:
         tele = "| — | — "
     conf = f"local[{cpus}], shuffle.partitions={cpus}, AQE on"
-    if keep_ms is None and d.get("isolated"):
-        conf += "; isolated re-measure"
     return f"| {name} | {sf} | {ms} {tele}| {conf} |\n"
 
 
@@ -83,17 +82,25 @@ while i < n:
             sys.exit("per-query table header has no separator row")
         out.append(SEP)
         i += 2
-        # collect (and skip) old data rows, keeping their ms values
-        old_ms = {}
+        # collect (and skip) old data rows, keeping their ms values and the
+        # core count their conf column names
+        old_ms, old_cpus = {}, {}
         while i < n and lines[i].startswith("| "):
             m = re.match(r"\|\s*(\w+)\s*\|\s*[\d.]+\s*\|\s*(-?\d+)\s*\|",
                          lines[i])
             if m:
                 old_ms[m.group(1)] = m.group(2)
+                c = re.search(r"local\[(\d+)\]", lines[i])
+                old_cpus[m.group(1)] = c.group(1) if c else None
             i += 1
         for name in sorted(queries):
             keep = (old_ms.get(name)
                     if telemetry_only and name not in update_times else None)
+            if keep is not None and old_cpus[name] != cpus:
+                sys.exit(f"{name}: its row's ms was taken at local[{old_cpus[name]}], "
+                         f"the sweep ran at local[{cpus}]; a kept ms would be "
+                         "mislabelled. Refresh fully, or list the query in "
+                         "--update-times.")
             out.append(row(name, keep_ms=keep))
         replaced = True
         continue
@@ -103,5 +110,4 @@ while i < n:
 if not replaced:
     sys.exit("per-query table header not found in BASELINE.md")
 open("BASELINE.md", "w", encoding="utf-8").writelines(out)
-n_iso = sum(1 for d in detail.values() if d.get("isolated"))
-print(f"wrote {len(queries)} rows (sf{sf}), {n_iso} isolated re-measures")
+print(f"wrote {len(queries)} rows (sf{sf}) at local[{cpus}]")
