@@ -22,7 +22,7 @@ import scala.util.control.NonFatal
   *
   * Inputs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: this host's
   * cores), SPARK_GRAFT_BENCH_ITERS and SPARK_GRAFT_ONLY (a comma-separated
-  * subset of query names).
+  * subset of query names; an unknown name fails the run).
   */
 object Bench {
 
@@ -66,11 +66,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus)
+    val selected = only.fold(SparkEntry.queries.toSeq)(SparkEntry.named)
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.local(cpus)
     graft.queries.SourcesDdl.cleanStaleScratch()
     val metrics = JobMetrics.attach(spark.sparkContext)
     val calibStart = calibrate(spark)
@@ -114,9 +114,7 @@ object Bench {
           None
       }
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> measure(name, fn) }
+    val results = selected.sortBy(_._1).map { case (name, fn) => name -> measure(name, fn) }
     val calibEnd = calibrate(spark)
     spark.stop()
 

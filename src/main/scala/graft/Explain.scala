@@ -5,19 +5,18 @@ package graft
   * the real executed plan, not a re-plan — see .claude/skills/verify/SKILL.md).
   *
   * Usage: runMain graft.Explain <queryName>[,<queryName>...] <sfDir> [outDir]
-  * With outDir, each plan is also written to <outDir>/<name>_<tag>.txt where
-  * tag comes from SPARK_GRAFT_PLAN_TAG (default "plan").
+  * (SPARK_GRAFT_CPUS, default this host's cores). With outDir, each plan is
+  * also written to <outDir>/<name>.txt.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(names, sfDir) = args.take(2)
     val outDir = args.lift(2)
-    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
+    val selected = SparkEntry.named(names)
+    val spark = GraftSession.local()
     graft.queries.SourcesDdl.cleanStaleScratch()
-    names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    selected.foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       println(s"==== executedPlan: $name ====")
@@ -25,7 +24,7 @@ object Explain {
       outDir.foreach { d =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(d, s"${name}_$tag.txt"), plan + "\n")
+          java.nio.file.Paths.get(d, s"$name.txt"), plan + "\n")
       }
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

@@ -137,8 +137,7 @@ object GraftCli {
         case other => System.err.println(s"ignoring unknown arg $other"); i += 1
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val out = new PrintWriter(System.out)
     val in: BufferedReader = (sql, file) match {
       case (Some(s), _) => new BufferedReader(new java.io.StringReader(s + ";"))

@@ -100,4 +100,12 @@ object GraftSession {
     functions.GraftFunctions.registerAll(spark)
     spark
   }
+
+  /** The core count every main runs at: SPARK_GRAFT_CPUS, default this
+    * host's cores. */
+  def localCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** [[getOrCreate]] on local[cores] with one shuffle partition per core. */
+  def local(cores: Int = localCores): SparkSession = getOrCreate(s"local[$cores]", cores)
 }

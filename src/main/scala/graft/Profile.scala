@@ -16,13 +16,12 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus)
+    val selected = SparkEntry.named(names)
+    val spark = GraftSession.local()
     graft.queries.SourcesDdl.cleanStaleScratch()
     val metrics = JobMetrics.attach(spark.sparkContext)
 
-    names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val fn = SparkEntry.queries(name)
+    selected.foreach { case (name, fn) =>
       // warmup: plan + codegen + parquet footer caches, identical to Bench
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       spark.catalog.clearCache()

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
   * scales one decade up (BENCH_sf1.json vs the sf0.1 baseline).
   *
   * Usage: runMain graft.ScaleUp <srcDir> <dstDir> <factor>
+  * (SPARK_GRAFT_CPUS, default this host's cores).
   *
   * Each copy i offsets every key/foreign-key column by i × (max(key)+1) of
   * the owning table, so referential integrity holds within a copy and no
@@ -18,7 +19,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = GraftSession.getOrCreate(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
+    val spark = GraftSession.local()
 
     def off(table: String, key: String): Long =
       spark.read.parquet(s"$src/$table.parquet")

@@ -17,4 +17,15 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     graft.queries.Registry.oracleSql
+
+  /** The registered queries in the comma-separated `names`, in order. Fails
+    * listing every name the registry does not have, so a typo never drops
+    * a query silently. */
+  def named(names: String): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val wanted = names.split(',').map(_.trim).filter(_.nonEmpty).distinct.toSeq
+    val unknown = wanted.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    wanted.map(n => n -> all(n))
+  }
 }

@@ -1,24 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
+    // Optional comma-separated filter for local iteration; a full run leaves it unset.
+    val selected = sys.env.get("SPARK_GRAFT_ONLY").fold(SparkEntry.queries.toSeq)(SparkEntry.named)
+    val spark = GraftSession.local()
     graft.queries.SourcesDdl.cleanStaleScratch()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated filter for local iteration; driver leaves unset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: $e")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -9,8 +9,6 @@ import org.apache.spark.sql.SparkSession
   * Spark built-in except the handful implemented in this package.
   */
 object GraftFunctions {
-  @volatile private var registered = false
-
   def registerAll(spark: SparkSession): Unit = synchronized {
     // idempotent; temp functions are session-scoped
     DateTimeFunctions.register(spark)
@@ -18,6 +16,5 @@ object GraftFunctions {
     VectorFunctions.register(spark)
     HashFunctions.register(spark)
     Udafs.register(spark)
-    registered = true
   }
 }

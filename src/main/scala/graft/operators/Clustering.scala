@@ -41,9 +41,6 @@ object Clustering {
       .select(least(col(aCol), col(bCol)).as("lo"), greatest(col(aCol), col(bCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
       .distinct())
-    val allNodes = Lineage.truncate(edges.select(col("lo").as("node"))
-      .unionByName(edges.select(col("hi").as("node")))
-      .distinct())
 
     // Round 15 (second pass): each star phase computes its neighborhood
     // minimum with a WINDOW over one keyed exchange instead of a
@@ -113,6 +110,10 @@ object Clustering {
         .isEmpty
     val forest = Lineage.fixpoint("connectedComponentsAlternating", edges, maxRounds)(
       e => smallStar(largeStar(e)))(identity)((_, next) => isStarForest(next))
+    // read once, so not checkpointed
+    val allNodes = edges.select(col("lo").as("node"))
+      .unionByName(edges.select(col("hi").as("node")))
+      .distinct()
     // fixpoint is a star forest: every non-root edge is (root, node)
     allNodes.join(forest.select(col("lo").as("label"), col("hi").as("node")), Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))

@@ -72,8 +72,7 @@ object Dedup {
     * [[minhashSignatures]]'s collision contract and birthday bound). */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    k: Int = 16, bands: Int = 4, minAgree: Double = 0.5,
-                   shingleSpace: Long = TextFunctions.MinhashP,
-                   maxPairsPerGroup: Int = Int.MaxValue): DataFrame = {
+                   shingleSpace: Long = TextFunctions.MinhashP): DataFrame = {
     val rows = k / bands
     // Tier 1: signatures and banding over distinct contents only (identical
     // text ⇒ identical signature ⇒ collides in every band with agreement
@@ -112,8 +111,8 @@ object Dedup {
       .select(col("doc_id").as("rep_id"))
       .withColumn("sig_agree", lit(1.0))
       .filter(col("sig_agree") >= minAgree)
-    expandPairs(repPairs, memb, "sig_agree", maxPairsPerGroup)
-      .unionByName(intraPairs(intra, memb, "sig_agree", maxPairsPerGroup))
+    expandPairs(repPairs, memb, "sig_agree")
+      .unionByName(intraPairs(intra, memb, "sig_agree"))
   }
 
   /** Edit-distance (Levenshtein) near-dup pairs under prefix+length
@@ -217,67 +216,21 @@ object Dedup {
   /** Expand representative-level pairs to all member pairs. Groups are
     * disjoint, so each unordered member pair surfaces exactly once; ids are
     * re-ordered per pair because member ids interleave across groups. */
-  /** Member expansion of cross-group rep pairs, optionally capped.
-    *
-    * CAP CONTRACT (`maxPairsPerGroup`, round 14, default unlimited): the
-    * member-level output of a duplicated corpus is inherently quadratic —
-    * a rep pair whose groups hold d_a and d_b copies expands to d_a·d_b
-    * member pairs (the sf100 ramp measured ded_minhash at 57x/decade from
-    * exactly this term; the machinery upstream of expansion is linear).
-    * With a cap, each (rep_a, rep_b) group emits only its FIRST
-    * `maxPairsPerGroup` pairs under the deterministic (doc_a asc, doc_b
-    * asc) order — an exact prefix of the uncapped group's sorted pair
-    * list, so the capped output is a deterministic subset, not a sample.
-    * The truncation runs through [[graft.operators.TopK.perKey]]'s bounded
-    * heaps: the d_a·d_b pairs stream through the partial phase and at most
-    * `maxPairsPerGroup` per group ever shuffle or materialize. Connectivity
-    * note: every member still appears in at least one emitted pair as long
-    * as the cap ≥ max(d_a, d_b) — the (min-id × other-side) pairs sort
-    * first — so cluster resolution over capped pairs stays equivalent; for
-    * pure dedup the rep-level pipelines ([[simhashRepPairs]],
-    * [[Clustering]]) remain the preferred scale path. */
-  private def expandPairs(repPairs: DataFrame, memb: DataFrame,
-                          scoreCol: String,
-                          maxPairsPerGroup: Int = Int.MaxValue): DataFrame =
-    if (maxPairsPerGroup == Int.MaxValue)
-      repPairs
-        .join(memb.select(col("rep_id").as("rep_a"), col("member_id").as("m_a")), Seq("rep_a"))
-        .join(memb.select(col("rep_id").as("rep_b"), col("member_id").as("m_b")), Seq("rep_b"))
-        .select(least(col("m_a"), col("m_b")).as("doc_a"),
-          greatest(col("m_a"), col("m_b")).as("doc_b"), col(scoreCol))
-    else
-      TopK.perKey(
-        repPairs
-          .join(memb.select(col("rep_id").as("rep_a"), col("member_id").as("m_a")), Seq("rep_a"))
-          .join(memb.select(col("rep_id").as("rep_b"), col("member_id").as("m_b")), Seq("rep_b"))
-          .select(col("rep_a"), col("rep_b"),
-            least(col("m_a"), col("m_b")).as("doc_a"),
-            greatest(col("m_a"), col("m_b")).as("doc_b"), col(scoreCol)),
-        Seq("rep_a", "rep_b"), Seq("doc_a" -> true, "doc_b" -> true), maxPairsPerGroup)
-        .select(col("doc_a"), col("doc_b"), col(scoreCol))
+  private def expandPairs(repPairs: DataFrame, memb: DataFrame, scoreCol: String): DataFrame =
+    repPairs
+      .join(memb.select(col("rep_id").as("rep_a"), col("member_id").as("m_a")), Seq("rep_a"))
+      .join(memb.select(col("rep_id").as("rep_b"), col("member_id").as("m_b")), Seq("rep_b"))
+      .select(least(col("m_a"), col("m_b")).as("doc_a"),
+        greatest(col("m_a"), col("m_b")).as("doc_b"), col(scoreCol))
 
-  /** All intra-group member pairs for groups passing `scored` (ckeyed by
-    * rep_id with a precomputed score column). Cap contract as in
-    * [[expandPairs]], keyed by rep_id: a d-copy group's C(d,2) intra pairs
-    * truncate to the first `maxPairsPerGroup` in (doc_a, doc_b) order. */
-  private def intraPairs(scored: DataFrame, memb: DataFrame,
-                         scoreCol: String,
-                         maxPairsPerGroup: Int = Int.MaxValue): DataFrame =
-    if (maxPairsPerGroup == Int.MaxValue)
-      scored
-        .join(memb.select(col("rep_id"), col("member_id").as("m_a")), Seq("rep_id"))
-        .join(memb.select(col("rep_id"), col("member_id").as("m_b")), Seq("rep_id"))
-        .filter(col("m_a") < col("m_b"))
-        .select(col("m_a").as("doc_a"), col("m_b").as("doc_b"), col(scoreCol))
-    else
-      TopK.perKey(
-        scored
-          .join(memb.select(col("rep_id"), col("member_id").as("m_a")), Seq("rep_id"))
-          .join(memb.select(col("rep_id"), col("member_id").as("m_b")), Seq("rep_id"))
-          .filter(col("m_a") < col("m_b"))
-          .select(col("rep_id"), col("m_a").as("doc_a"), col("m_b").as("doc_b"), col(scoreCol)),
-        Seq("rep_id"), Seq("doc_a" -> true, "doc_b" -> true), maxPairsPerGroup)
-        .select(col("doc_a"), col("doc_b"), col(scoreCol))
+  /** All intra-group member pairs for groups passing `scored` (keyed by
+    * rep_id with a precomputed score column). */
+  private def intraPairs(scored: DataFrame, memb: DataFrame, scoreCol: String): DataFrame =
+    scored
+      .join(memb.select(col("rep_id"), col("member_id").as("m_a")), Seq("rep_id"))
+      .join(memb.select(col("rep_id"), col("member_id").as("m_b")), Seq("rep_id"))
+      .filter(col("m_a") < col("m_b"))
+      .select(col("m_a").as("doc_a"), col("m_b").as("doc_b"), col(scoreCol))
 
   /** All document pairs with k-shingle Jaccard ≥ `threshold`, via an
     * inverted shingle index with exact-duplicate collapse and a stop-shingle
@@ -316,8 +269,7 @@ object Dedup {
                         // wider digest, and HashCollisionLawsSpec passes a
                         // deliberately TINY space to make the collision
                         // semantics above observable and law-checked.
-                        shingleHash: Column => Column = TextFunctions.hash64,
-                        maxPairsPerGroup: Int = Int.MaxValue): DataFrame = {
+                        shingleHash: Column => Column = TextFunctions.hash64): DataFrame = {
     // Tier 1: collapse exact duplicates; the inverted index is built over
     // distinct contents only.
     val (reps, memb) = collapseExact(docs, idCol, textCol)
@@ -399,8 +351,8 @@ object Dedup {
       .select(col("rep_id"),
         (col("s_sh").cast(DoubleType) / (col("n_sh") * 2 - col("s_sh"))).as("jaccard"))
       .filter(col("jaccard") > threshold)
-    expandPairs(repPairs, memb, "jaccard", maxPairsPerGroup)
-      .unionByName(intraPairs(intraScores, memb, "jaccard", maxPairsPerGroup))
+    expandPairs(repPairs, memb, "jaccard")
+      .unionByName(intraPairs(intraScores, memb, "jaccard"))
   }
 
   /** Prefix-filtered shingle-set similarity join — the AllPairs/PPJoin
@@ -813,14 +765,12 @@ object Dedup {
     counted.select(col("doc_id"), sig.as("simhash"))
   }
 
-  /** SimHash near-dup pairs within `maxHamming` (≤ 3 with 4 chunks).
-    * `maxPairsPerGroup`: see [[expandPairs]]'s cap contract. */
+  /** SimHash near-dup pairs within `maxHamming` (≤ 3 with 4 chunks). */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3,
-                   maxPairsPerGroup: Int = Int.MaxValue): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = {
     val (repPairs, memb, intra) = simhashRepPairs(docs, idCol, textCol, maxHamming)
-    expandPairs(repPairs, memb, "hamming", maxPairsPerGroup)
-      .unionByName(intraPairs(intra, memb, "hamming", maxPairsPerGroup))
+    expandPairs(repPairs, memb, "hamming")
+      .unionByName(intraPairs(intra, memb, "hamming"))
   }
 
   /** Representative-level simhash pairs BEFORE member expansion, for

@@ -288,47 +288,13 @@ object GraphOps {
     * sum. Scores stay UNNORMALIZED exact BIGINTs (normalization is a
     * monotone per-round constant, so rankings are identical and no division
     * ever happens) ⇒ hash-exact at any partitioning. Returns
-    * (node, hub, authority) after the final round.
-    *
-    * Overflow contract: from h₀ = 1 one h→a→h alternation multiplies the
-    * max score by at most max over EDGES (u,w) of dout(u)·din(w) — the
-    * amplification pairs a hub's out-degree with the in-degree of an
-    * authority it actually points to, so an unrelated high-in-degree /
-    * high-out-degree node pair does not inflate the bound (it did under
-    * the round-9 global dIn·dOut form, which hard-rejected graphs that
-    * could never overflow). For rounds ≥ 3 — where even the edge-level
-    * bound can make overflow plausible — the worst case is checked up
-    * front and, when it exceeds the signed 64-bit range, logged as a
-    * WARNING with the actionable bound; execution proceeds, and an actual
-    * overflow surfaces as the session's loud ANSI ARITHMETIC_OVERFLOW
-    * mid-round (the bound is worst-case, not a predictor — scores only
-    * reach it when mass concentrates, so a hard require over-rejects).
-    * NOTE: at rounds ≥ 3 this advisory check runs an EAGER degree-join job
-    * during DataFrame construction (before any action on the result).
-    * Since round 14 the edge-input `Lineage.truncate` below is itself an
-    * eager localCheckpoint job at EVERY rounds value, so construction is
-    * never job-free; at rounds ≤ 2 the checkpoint is the only
-    * construction-time job (ADVICE r14 — the old single-job/no-eager-work
-    * claim predated the truncate). */
+    * (node, hub, authority) after the final round. A score past the
+    * signed 64-bit range fails loudly as the session's ANSI
+    * ARITHMETIC_OVERFLOW mid-round. Construction runs no job but the
+    * edge-input `Lineage.truncate`, at any `rounds`. */
   def hits(edges0: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"hits needs at least one round, got $rounds")
     val edges = Lineage.truncate(edges0) // see relaxBounded — 2 copies/round otherwise
-    if (rounds >= 3) {
-      val douts = edges.groupBy(col("src")).agg(count(lit(1)).as("dout"))
-      val dins = edges.groupBy(col("dst")).agg(count(lit(1)).as("din"))
-      val ampRow = edges.join(douts, "src").join(dins, "dst")
-        .agg(max(col("dout") * col("din")).as("amp")).collect()(0)
-      val amp = BigInt(if (ampRow.isNullAt(0)) 1L else ampRow.getLong(0))
-      if (amp.pow(rounds) > BigInt(Long.MaxValue)) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"hits: unnormalized BIGINT scores MAY overflow 64 bits — worst-case " +
-            s"per-alternation amplification (max over edges of dout*din) = $amp, " +
-            s"$amp^$rounds exceeds Long.MaxValue. Proceeding: an actual overflow " +
-            s"fails loudly as ANSI ARITHMETIC_OVERFLOW mid-round; lower rounds " +
-            s"(ranking typically stabilizes in 2-3) or pre-aggregate the graph " +
-            s"if it does")
-      }
-    }
     val nodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
     def authStep(h: DataFrame): DataFrame = nodes
@@ -360,9 +326,8 @@ object GraphOps {
     * require. Returns (id, r). */
   def pageRank(nodes0: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     val nodes = Lineage.truncate(nodes0) // referenced per unrolled round
-    val e = Lineage.truncate(edges) // see relaxBounded — per-round copies otherwise
-    val withDeg = Lineage.truncate(e.join(
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+    val withDeg = Lineage.truncate(edges.join(
+      edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")) // read every round
     def step(ranks: DataFrame): DataFrame = {
       val contribs = withDeg
         .join(ranks.withColumnRenamed("id", "src"), "src")

@@ -42,29 +42,12 @@ case class TopKPerKey(
 }
 
 /** Plans [[TopKPerKey]] as partial → (exchange inserted by
-  * EnsureRequirements) → final. The in-memory row budget is captured from
-  * the session conf at planning time (executors never read session confs). */
+  * EnsureRequirements) → final. The test hooks are captured from the
+  * session conf at planning time (executors never read session confs). */
 object GraftStrategies extends SparkStrategy {
-  /** Max rows retained across all per-key heaps in ONE task (≈ distinct
-    * keys × k for that task) before [[TopKPerKeyExec]] abandons the
-    * hash-of-heaps and falls back to a spillable external sort.
-    *
-    * Default `auto` (round 14): each task derives a retained-BYTE budget
-    * from the executor's own memory manager — see [[TopKBudget]] — so the
-    * same jar is safe on a 1 GB executor and a 56 GB one without tuning.
-    * The round-13 sf100 ramp showed why a fixed row count cannot be the
-    * default: 4M retained rows per task × 32 concurrent tasks of
-    * real-width CDC rows OOMed a shared 56 GB heap, while the same fixed
-    * count was hopelessly conservative for small executors. An explicit
-    * integer keeps the exact historical row-count semantics (and is
-    * sanity-checked against the executor heap — see
-    * [[TopKBudget.failFastExplicit]]). */
-  val MaxRowsKey = "spark.graft.topk.maxRowsInMemory"
-
-  /** Row-count ceiling of the auto mode (and the historical fixed
-    * default): even with bytes to spare, past ~4M retained row copies the
-    * hash-of-heaps' object churn dominates — fall back to the spillable
-    * sort instead. */
+  /** Row-count ceiling of the per-task budget: even with bytes to spare,
+    * past ~4M retained row copies the hash-of-heaps' object churn
+    * dominates — fall back to the spillable sort instead. */
   val MaxRowsDefault: Int = 4 * 1024 * 1024
 
   /** TEST-ONLY: force the fallback's external sorter to spill every N
@@ -74,23 +57,19 @@ object GraftStrategies extends SparkStrategy {
     * memory pressure. */
   val TestSpillFrequencyKey = "spark.graft.topk.testSpillFrequency"
 
-  /** TEST-ONLY: override the auto mode's derived per-task byte budget
-    * (0 = off, production default) so the auto fallback trigger is
-    * law-testable at corpus sizes a spec can afford. */
+  /** TEST-ONLY: override the derived per-task byte budget (0 = off,
+    * production default) so the fallback is law-testable at corpus sizes a
+    * spec can afford; a budget of 1 byte puts every task on the fallback. */
   val TestPerTaskBytesKey = "spark.graft.topk.testPerTaskBytes"
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, ordering, k, child) =>
-      val raw = SQLConf.get.getConfString(MaxRowsKey, "auto")
-      val maxRows = if (raw.equalsIgnoreCase("auto")) -1 else raw.toInt
       val spillFreq = SQLConf.get.getConfString(TestSpillFrequencyKey, "0").toInt
       val perTaskBytes = SQLConf.get.getConfString(TestPerTaskBytesKey, "0").toLong
       val partial = TopKPerKeyExec(keys, ordering, k, planLater(child),
-        partial = true, maxRowsInMemory = maxRows, testSpillFrequency = spillFreq,
-        testPerTaskBytes = perTaskBytes)
+        partial = true, testSpillFrequency = spillFreq, testPerTaskBytes = perTaskBytes)
       TopKPerKeyExec(keys, ordering, k, partial,
-        partial = false, maxRowsInMemory = maxRows, testSpillFrequency = spillFreq,
-        testPerTaskBytes = perTaskBytes) :: Nil
+        partial = false, testSpillFrequency = spillFreq, testPerTaskBytes = perTaskBytes) :: Nil
     case _ => Nil
   }
 }
@@ -167,25 +146,6 @@ object TopKBudget {
     case Local(_) => unifiedPoolBytes(conf)
     case _ => unifiedPoolBytes(conf, conf.getSizeAsMb("spark.executor.memory", "1g") << 20)
   }
-
-  /** Fail fast on an explicitly configured row budget that cannot fit
-    * this executor's heap when every slot fills it at once — the
-    * actionable alternative to the late full-GC death the sf100 ramp hit.
-    * `rowWidthEst` is the planning-schema estimate (variable-width columns
-    * count `defaultSize`, so this catches the flagrantly impossible
-    * configs, not every tight one). */
-  def failFastExplicit(maxRows: Int, rowWidthEst: Long, conf: org.apache.spark.SparkConf): Unit = {
-    val slots = taskSlots(conf)
-    val heap = Runtime.getRuntime.maxMemory()
-    val need = maxRows.toLong * (rowWidthEst + RowOverheadBytes) * slots
-    if (need > heap) throw new IllegalStateException(
-      s"${GraftStrategies.MaxRowsKey}=$maxRows cannot fit: $slots concurrent tasks x " +
-        s"$maxRows retained rows x ~${rowWidthEst + RowOverheadBytes} B/row ≈ ${need >> 20} MB " +
-        s"> executor heap ${heap >> 20} MB. Lower ${GraftStrategies.MaxRowsKey} (or unset it " +
-        "for auto-sizing), raise spark.executor.memory, or reduce concurrent tasks per " +
-        "executor (spark.executor.cores) / grow the key spread across more partitions " +
-        "(spark.sql.shuffle.partitions).")
-  }
 }
 
 /** Bounded-heap per-key top-k. `partial = true` runs before the shuffle on
@@ -194,17 +154,13 @@ object TopKBudget {
   * inserts exactly one hash exchange between the two — over at most
   * keys*k rows per upstream partition.
   *
-  * MEMORY CONTRACT: the hash-of-heaps is bounded. With an explicit
-  * `maxRowsInMemory` it holds at most that many row copies (historical
-  * row-count semantics, heap-sanity-checked by
-  * [[TopKBudget.failFastExplicit]]); in auto mode (`maxRowsInMemory = -1`,
-  * the default) each task bounds the RETAINED BYTES — actual
-  * `UnsafeRow.getSizeInBytes` plus a fixed per-row overhead, keys
-  * included — at its derived fair share of the executor's unified pool
-  * ([[TopKBudget.derivedPerTaskBytes]]), with [[GraftStrategies.MaxRowsDefault]]
-  * as a row-count ceiling. The task that exceeds the budget
-  * (distinct-key cardinality or row width beyond it) falls back to
-  * Spark's spillable external sort — the pruned heap
+  * MEMORY CONTRACT: the hash-of-heaps is bounded. Each task bounds the
+  * RETAINED BYTES — actual `UnsafeRow.getSizeInBytes` plus a fixed
+  * per-row overhead, keys included — at its derived fair share of the
+  * executor's unified pool ([[TopKBudget.derivedPerTaskBytes]]), with
+  * [[GraftStrategies.MaxRowsDefault]] as a row-count ceiling. The task
+  * that exceeds the budget (distinct-key cardinality or row width beyond
+  * it) falls back to Spark's spillable external sort — the pruned heap
   * contents plus the rest of the input are sorted by (keys, rank order) and
   * the first k rows of each key group are streamed out. The fallback is
   * LOSSLESS: a row evicted from its heap was strictly worse than k rows of
@@ -224,11 +180,8 @@ case class TopKPerKeyExec(
     k: Int,
     child: SparkPlan,
     partial: Boolean,
-    maxRowsInMemory: Int = -1,
     testSpillFrequency: Int = 0,
     testPerTaskBytes: Long = 0L) extends UnaryExecNode {
-  require(maxRowsInMemory == -1 || maxRowsInMemory >= 1,
-    s"${GraftStrategies.MaxRowsKey} must be >= 1 or 'auto', got $maxRowsInMemory")
 
   override def output: Seq[Attribute] = child.output
 
@@ -247,26 +200,19 @@ case class TopKPerKeyExec(
     val sortExprs = ordering
     val attrs = output
     val limit = k
-    val maxRows = maxRowsInMemory
     val spillFreq = testSpillFrequency
     val perTaskBytesOverride = testPerTaskBytes
     val schema = DataTypeUtils.fromAttributes(attrs)
     // planning-schema row-width estimate (variable-width columns count
-    // defaultSize) — the fail-fast check's input and the byte charge for
-    // the rare non-Unsafe row
+    // defaultSize) — the byte charge for the rare non-Unsafe row
     val rowWidthEst = schema.defaultSize.toLong
     val fallbackTasks = longMetric("fallbackTasks")
     child.execute().mapPartitions { iter =>
-      val autoMode = maxRows <= 0
-      val env = org.apache.spark.SparkEnv.get
-      if (!autoMode) TopKBudget.failFastExplicit(maxRows, rowWidthEst, env.conf)
+      val conf = org.apache.spark.SparkEnv.get.conf
       val byteBudget: Long =
-        if (!autoMode) Long.MaxValue
-        else if (perTaskBytesOverride > 0) perTaskBytesOverride
+        if (perTaskBytesOverride > 0) perTaskBytesOverride
         else TopKBudget.derivedPerTaskBytes(
-          TopKBudget.unifiedPoolBytes(env.conf), TopKBudget.taskSlots(env.conf))
-      val rowCeiling: Long =
-        if (autoMode) GraftStrategies.MaxRowsDefault.toLong else maxRows.toLong
+          TopKBudget.unifiedPoolBytes(conf), TopKBudget.taskSlots(conf))
       def rowBytes(r: InternalRow): Long = r match {
         case u: UnsafeRow => u.getSizeInBytes.toLong + TopKBudget.RowOverheadBytes
         case _            => rowWidthEst + TopKBudget.RowOverheadBytes
@@ -297,7 +243,7 @@ case class TopKPerKeyExec(
             retained += 1
             retainedBytes += rowBytes(row) + key.getSizeInBytes + TopKBudget.RowOverheadBytes
         }
-        if (retained > rowCeiling || (autoMode && retainedBytes > byteBudget))
+        if (retained > GraftStrategies.MaxRowsDefault || retainedBytes > byteBudget)
           overflow = true
       }
       if (!overflow) heaps.iterator.flatMap(_._2.iterator)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.GraftStrategies
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -112,17 +111,18 @@ class ConstrainedMemorySpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
   }
 
-  /** TopKPerKey with the retained-row budget forced to 1: every task takes
-    * the sort fallback; under the force threshold the fallback sorter
+  /** TopKPerKey with the per-task byte budget forced to 1 byte: every task
+    * takes the sort fallback; under the force threshold the fallback sorter
     * spills to disk. */
   private def topkFallbackQuery(spark: SparkSession): Set[(Int, Int, Long)] = {
     val rng = new scala.util.Random(13)
     val rows = (0 until 60000).map(i => (rng.nextInt(800), rng.nextInt(40), i.toLong))
     val df = spark.createDataFrame(rows).toDF("key", "score", "id").repartition(6)
-    spark.conf.set(GraftStrategies.MaxRowsKey, "1")
-    try graft.operators.TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 2)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    finally spark.conf.unset(GraftStrategies.MaxRowsKey)
+    val (top, fallbacks) = TopKLawsSpec.forcedFallback(spark)(
+      graft.operators.TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 2)
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet)
+    assert(fallbacks > 0L, "no task took the sort fallback")
+    top
   }
 
   private def heavyGate(spark: SparkSession): Seq[String] =
@@ -135,18 +135,10 @@ class ConstrainedMemorySpec extends AnyFunSuite with BeforeAndAfterAll {
     * scenario scaled down: 700k distinct keys in ONE task retain ~120 MB
     * of heap rows. Returns (output rows, fallback tasks). */
   private def autoBudgetQuery(spark: SparkSession): (Long, Long) = {
-    import graft.plans.TopKPerKeyExec
     val df = spark.range(0, 700000L, 1, 1)
       .selectExpr("id as key", "id % 40 as score", "id as i")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val out = graft.operators.TopK.perKey(df, Seq("key"), Seq("score" -> true, "i" -> true), 1)
-      val n = out.collect().length.toLong
-      val fallbacks = out.queryExecution.executedPlan.collect {
-        case t: TopKPerKeyExec => t.metrics("fallbackTasks").value
-      }.sum
-      (n, fallbacks)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val out = graft.operators.TopK.perKey(df, Seq("key"), Seq("score" -> true, "i" -> true), 1)
+    (out.collect().length.toLong, TopKLawsSpec.fallbackTasks(out.queryExecution.executedPlan))
   }
 
   private case class LegResult(sortAgg: Seq[(Long, Long)],

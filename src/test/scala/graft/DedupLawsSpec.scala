@@ -91,76 +91,6 @@ class DedupLawsSpec extends SparkSpec {
 
   /** Reference normalize — transcribed from TextFunctions.normalize:
     * lowercase, strip non-[a-z0-9 ], collapse whitespace runs, trim. */
-  // ---- member-pair cap (round 14) ---------------------------------------
-
-  /** Corpus with HEAVY planted duplication (groups of 1..6 exact copies of
-    * each distinct content, plus near-dup mutations) — the regime where
-    * member expansion is quadratic and the cap has something to truncate. */
-  private def capCorpus(seed: Long): Seq[(Long, String)] = {
-    val rng = new scala.util.Random(seed)
-    val words = (0 until 8).map(i => s"w$i")
-    def doc(n: Int) = Seq.fill(n)(words(rng.nextInt(words.size))).mkString(" ")
-    var id = -1L
-    def nextId() = { id += 1; id }
-    (0 until 8).flatMap { _ =>
-      val base = doc(5 + rng.nextInt(5))
-      val toks = base.split(" ")
-      val mutated = toks.updated(rng.nextInt(toks.length),
-        words(rng.nextInt(words.size))).mkString(" ")
-      Seq.fill(1 + rng.nextInt(6))(base).map(t => (nextId(), t)) ++
-        Seq.fill(1 + rng.nextInt(3))(mutated).map(t => (nextId(), t))
-    }
-  }
-
-  test("maxPairsPerGroup: deterministic exact-prefix truncation on all three member-pair pipelines") {
-    for (seed <- Seq(11L, 202L); cap <- Seq(2, 5)) {
-      val docs = capCorpus(seed)
-      // group key per doc: min doc id sharing its exact text (= collapseExact's rep)
-      val rep: Map[Long, Long] = docs.groupBy(_._2).values
-        .flatMap { g => val r = g.map(_._1).min; g.map(d => d._1 -> r) }.toMap
-      val df = spark.createDataFrame(docs).toDF("doc_id", "text")
-
-      def pairs(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long, String)] =
-        d.collect().map(r => (r.getLong(0), r.getLong(1), String.valueOf(r.get(2))))
-          .toSeq.sortBy(p => (p._1, p._2))
-
-      type Pipe = (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame
-      val pipelines: Seq[(String, Pipe)] = Seq(
-        ("minhash", (d, c) => Dedup.minhashPairs(d, "doc_id", "text", maxPairsPerGroup = c)),
-        ("ngram", (d, c) => Dedup.ngramJaccardPairs(d, "doc_id", "text", maxPairsPerGroup = c)),
-        ("simhash", (d, c) => Dedup.simhashPairs(d, "doc_id", "text", maxPairsPerGroup = c)))
-
-      for ((name, run) <- pipelines) {
-        val uncapped = pairs(run(df, Int.MaxValue))
-        val capped = pairs(run(df, cap))
-        // determinism: the truncation order (doc_a, doc_b) is total, so a
-        // different INPUT partitioning must yield the identical capped set
-        val capped2 = pairs(run(df.repartition(7), cap))
-        assert(capped == capped2, s"$name seed=$seed cap=$cap: capped output not deterministic")
-        // exact-prefix contract per group: each (rep_a, rep_b) group keeps
-        // exactly the first min(cap, n) pairs of its (doc_a, doc_b)-sorted
-        // uncapped list, scores included
-        def byGroup(ps: Seq[(Long, Long, String)]) = ps.groupBy { case (a, b, _) =>
-          val (ra, rb) = (rep(a), rep(b)); (math.min(ra, rb), math.max(ra, rb))
-        }
-        val wantGroups = byGroup(uncapped)
-        val gotGroups = byGroup(capped)
-        assert(gotGroups.keySet == wantGroups.keySet,
-          s"$name seed=$seed cap=$cap: the cap must never drop a whole group " +
-            s"(missing ${(wantGroups.keySet -- gotGroups.keySet).take(3)})")
-        for ((g, want) <- wantGroups) {
-          val exp = want.sortBy(p => (p._1, p._2)).take(cap)
-          assert(gotGroups(g) == exp,
-            s"$name seed=$seed cap=$cap group=$g: capped pairs are not the exact " +
-              s"sorted prefix; got=${gotGroups(g).take(5)} want=${exp.take(5)}")
-        }
-        // a cap above every group size is the identity
-        assert(pairs(run(df, 100000)) == uncapped,
-          s"$name seed=$seed: large cap must equal the uncapped output")
-      }
-    }
-  }
-
   private def refNormalize(t: String): String =
     t.toLowerCase(java.util.Locale.ROOT)
       .replaceAll("[^a-z0-9 ]", "").replaceAll("\\s+", " ").trim

@@ -356,12 +356,11 @@ class GraphLawsSpec extends SparkSpec {
       assert(got == want, s"seed=$seed rounds=$rounds: " +
         s"missing ${(want -- got).take(5)}, spurious ${(got -- want).take(5)}")
     }
-    // teeth for the edge-level advisory bound (round 11): a double-ended
-    // hub (dIn = dOut = 2000 at node 0) was FALSELY REJECTED by the old
-    // global (dIn·dOut)^rounds = 6.4e19 require — but no edge pairs the
-    // two degrees (every edge touches a degree-1 leaf), so the edge-level
-    // amplification is 2000 and the true scores peak near 2000^3 ≈ 8e9.
-    // rounds=3 must now construct AND run to the correct answer.
+    // a double-ended hub (dIn = dOut = 2000 at node 0) whose worst-case
+    // global (dIn·dOut)^rounds bound is 6.4e19 — but no edge pairs the two
+    // degrees (every edge touches a degree-1 leaf), so the true scores peak
+    // near 2000^3 ≈ 8e9: rounds=3 must construct AND run to the correct
+    // answer.
     import spark.implicits._
     val hub = ((1L to 2000L).map(v => (0L, v)) ++ (1L to 2000L).map(v => (v, 0L)))
       .toDF("src", "dst")
@@ -381,14 +380,13 @@ class GraphLawsSpec extends SparkSpec {
     }
     assert(hubRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
       hubNodes.map(v => (v, hh(v), aa(v))).toSet)
-    // ...and a graph whose edge-level bound genuinely trips — a complete
-    // 80x80 bipartite core concentrates ALL mass every alternation
-    // (amp = 6400 exactly, attained): construction must SUCCEED (advisory,
-    // not a require) and the real overflow at rounds=6 (6400^6 ≈ 6.9e22;
-    // true h after 6 alternations = 6400^6) must surface as the session's
-    // loud ANSI ARITHMETIC_OVERFLOW on execution, not a silent wrap
+    // ...and a graph that really overflows — a complete 80x80 bipartite
+    // core concentrates ALL mass every alternation: construction must
+    // SUCCEED and the real overflow at rounds=6 (true h after 6
+    // alternations = 6400^6 ≈ 6.9e22) must surface as the session's loud
+    // ANSI ARITHMETIC_OVERFLOW on execution, not a silent wrap
     val bip = (for (s <- 1L to 80L; d <- 81L to 160L) yield (s, d)).toDF("src", "dst")
-    val planned = GraphOps.hits(bip, rounds = 6) // must not throw (advisory)
+    val planned = GraphOps.hits(bip, rounds = 6)
     val overflow = intercept[Exception](planned.collect())
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)

@@ -58,13 +58,24 @@ class LoopJobsSpec extends SparkSpec {
       "kcoreToFixpoint" -> jobsOf(GraphOps.kcoreToFixpoint(tail, k = 2).collect()),
       "kcorePeel" -> jobsOf(GraphOps.kcorePeel(tail, k = 2, rounds = 3).collect()))
     // Measured under the shared local[4,2] session. The star-forest loop
-    // lost its pre-round probe (its shuffle-map job plus its isEmpty job);
-    // kcorePeel now truncates its own input, which its callers did before.
+    // lost its pre-round probe (its shuffle-map job plus its isEmpty job)
+    // and then the checkpoint of its node set, which only the final join
+    // reads; kcorePeel now truncates its own input, which its callers did
+    // before.
     val want = Map(
-      "connectedComponentsAlternating" -> 54,
+      "connectedComponentsAlternating" -> 53,
       "bfsToFixpoint" -> 89,
       "kcoreToFixpoint" -> 29,
       "kcorePeel" -> 11)
     assert(got == want)
+  }
+
+  test("HITS construction runs as many jobs at rounds = 6 as at rounds = 2") {
+    // an 80x80 complete bipartite core: its scores overflow 64 bits by
+    // rounds = 6, which execution reports; construction runs only the
+    // input checkpoint at any round count
+    def bip = edges(for (s <- 1L to 80L; d <- 81L to 160L) yield (s, d), "src", "dst")
+    val two = jobsOf(GraphOps.hits(bip, rounds = 2))
+    assert(jobsOf(GraphOps.hits(bip, rounds = 6)) == two)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{GraphOps, TopK}
-import graft.plans.GraftStrategies
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
@@ -96,12 +95,12 @@ class RetryLawsSpec extends SparkSpec {
     def topk(df: org.apache.spark.sql.DataFrame) =
       TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 2)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    spark.conf.set(GraftStrategies.MaxRowsKey, "1") // every task on the sort fallback
-    try {
-      val want = topk(clean)
-      val got = assertingRetries(topk(clean.withColumn("score", failInt(col("score")))))
-      assert(got == want && want.nonEmpty)
-    } finally spark.conf.unset(GraftStrategies.MaxRowsKey)
+    // every task on the sort fallback
+    val (want, _) = TopKLawsSpec.forcedFallback(spark)(topk(clean))
+    val (got, fallbacks) = TopKLawsSpec.forcedFallback(spark)(
+      assertingRetries(topk(clean.withColumn("score", failInt(col("score"))))))
+    assert(fallbacks > 0L, "no task took the sort fallback")
+    assert(got == want && want.nonEmpty)
   }
 
   test("mergeable sketch UDAFs (KLL, Misra-Gries) are bit-identical under retries") {

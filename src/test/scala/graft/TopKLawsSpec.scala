@@ -2,7 +2,47 @@ package graft
 
 import graft.operators.TopK
 import graft.plans.{GraftStrategies, TopKPerKeyExec}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBusBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
+
+object TopKLawsSpec {
+  /** `fallbackTasks` summed over the TopKPerKey nodes of an executed plan,
+    * through AQE's final plan and its query stages. */
+  def fallbackTasks(plan: SparkPlan): Long = plan match {
+    case t: TopKPerKeyExec => t.metrics("fallbackTasks").value + fallbackTasks(t.child)
+    case a: AdaptiveSparkPlanExec => fallbackTasks(a.executedPlan)
+    case s: QueryStageExec => fallbackTasks(s.plan)
+    case p => p.children.map(fallbackTasks).sum
+  }
+
+  /** Runs `body` with the per-task byte budget forced to 1 byte, so every
+    * TopKPerKey task with input takes the sort fallback, and returns its
+    * result with the fallback tasks of every query `body` ran. */
+  def forcedFallback[A](spark: SparkSession)(body: => A): (A, Long) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    spark.conf.set(GraftStrategies.TestPerTaskBytesKey, "1")
+    try {
+      val out = body
+      ListenerBusBridge.drain(spark.sparkContext)
+      (out, plans.asScala.map(fallbackTasks).sum)
+    } finally {
+      spark.conf.unset(GraftStrategies.TestPerTaskBytesKey)
+      spark.listenerManager.unregister(listener)
+    }
+  }
+}
 
 /** Randomized differential test of the custom bounded-heap TopKPerKey
   * physical operator against the window-rank formulation it replaces.
@@ -18,14 +58,28 @@ import org.apache.spark.sql.functions._
   * sets — any heap-comparator inversion, partial-phase overflow,
   * per-partition boundary bug, or fallback group-boundary bug shows up as
   * a set difference. EVERY law runs twice: once on the default heap path
-  * and once with the row budget forced to 1 so both phases take the
-  * external-sort fallback.
+  * and once with the per-task byte budget forced to 1 byte so both phases
+  * take the external-sort fallback.
   */
 class TopKLawsSpec extends SparkSpec {
 
-  private def withMaxRows[A](maxRows: String)(body: => A): A = {
-    spark.conf.set(GraftStrategies.MaxRowsKey, maxRows)
-    try body finally spark.conf.unset(GraftStrategies.MaxRowsKey)
+  /** `body` on the forced sort fallback; fails unless some task took it. */
+  private def onFallback[A](body: => A): A = {
+    val (out, fallbacks) = TopKLawsSpec.forcedFallback(spark)(body)
+    assert(fallbacks > 0L, "the forced budget drove no task onto the sort fallback")
+    out
+  }
+
+  /** Top-k of (key, score, id) by (score, id) ascending, with the run's
+    * fallback tasks; `bytes` forces the per-task byte budget. */
+  private def countedTopK(df: DataFrame, k: Int,
+                          bytes: Option[Long] = None): (Set[(Int, Int, Long)], Long) = {
+    bytes.foreach(b => spark.conf.set(GraftStrategies.TestPerTaskBytesKey, b.toString))
+    try {
+      val out = TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), k)
+      (out.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet,
+        TopKLawsSpec.fallbackTasks(out.queryExecution.executedPlan))
+    } finally spark.conf.unset(GraftStrategies.TestPerTaskBytesKey)
   }
 
   test("random corpora: heap top-k equals the window-rank reference under any partitioning") {
@@ -51,7 +105,7 @@ class TopKLawsSpec extends SparkSpec {
         .filter(col("rk") <= k).drop("rk")
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
 
-      for ((label, got) <- Seq("heap" -> run(), "fallback" -> withMaxRows("1")(run()))) {
+      for ((label, got) <- Seq("heap" -> run(), "fallback" -> onFallback(run()))) {
         assert(got == want,
           s"seed=$seed k=$k scoreAsc=$scoreAsc path=$label: " +
             s"${label}-only ${got.diff(want).take(5)}, window-only ${want.diff(got).take(5)}")
@@ -67,34 +121,18 @@ class TopKLawsSpec extends SparkSpec {
     val rng = new scala.util.Random(99)
     // high distinct-key cardinality relative to the forced budget — the
     // 100-TB latest-per-key shape (billions of keys vs a fixed budget),
-    // scaled down: 1000 keys against a budget of 8 retained rows
+    // scaled down: 1000 keys against a 1 KB budget (~8 retained rows)
     val rows = (0 until 4000).map(i => (rng.nextInt(1000), rng.nextInt(50), i.toLong))
     val df = spark.createDataFrame(rows).toDF("key", "score", "id").repartition(7)
 
-    def run(maxRows: Option[String]): (Set[(Int, Int, Long)], Long) = {
-      // AQE off for this run only, so the executed plan exposes the exec
-      // nodes (and their SQL metrics) without query-stage wrapping
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      def body = {
-        val out = TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 3)
-        val got = out.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-        val fallbacks = out.queryExecution.executedPlan.collect {
-          case t: TopKPerKeyExec => t.metrics("fallbackTasks").value
-        }.sum
-        (got, fallbacks)
-      }
-      try maxRows.fold(body)(m => withMaxRows(m)(body))
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-
-    // None = the auto default (round 14): the derived byte budget dwarfs
-    // this corpus, so the default path must stay on the heap
-    val (heapGot, heapFallbacks) = run(None)
-    val (spillGot, spillFallbacks) = run(Some("8"))
+    // the derived byte budget dwarfs this corpus, so the default path must
+    // stay on the heap
+    val (heapGot, heapFallbacks) = countedTopK(df, 3)
+    val (spillGot, spillFallbacks) = countedTopK(df, 3, Some(1024L))
     assert(heapFallbacks == 0L,
       s"default path must stay on the heap, saw $heapFallbacks fallback tasks")
     assert(spillFallbacks > 0L,
-      "forced budget of 8 rows must drive tasks onto the external-sort fallback")
+      "forced budget of 1 KB must drive tasks onto the external-sort fallback")
     assert(spillGot == heapGot,
       s"fallback-only ${spillGot.diff(heapGot).take(5)}, heap-only ${heapGot.diff(spillGot).take(5)}")
     // ground truth: every key keeps exactly its 3 best (score, id) rows
@@ -110,7 +148,7 @@ class TopKLawsSpec extends SparkSpec {
     val want = rows.groupBy(_._1).flatMap { case (_, g) =>
       g.sortBy(r => (r._2, r._3)).take(20)
     }.toSet // k=20 > every group size: the operator must pass groups through whole
-    val got = withMaxRows("1") {
+    val got = onFallback {
       TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 20)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
     }
@@ -129,7 +167,7 @@ class TopKLawsSpec extends SparkSpec {
       val fn = SparkEntry.queries(name)
       def run(): Seq[String] = fn(spark, sfDir).collect().map(_.toString).toSeq.sorted
       val want = run()
-      val got = withMaxRows("1")(run())
+      val got = onFallback(run())
       assert(got == want,
         s"$name differs through the fallback: ${got.diff(want).take(3)} vs ${want.diff(got).take(3)}")
       assert(want.nonEmpty, s"$name returned no rows at $sfDir")
@@ -173,7 +211,7 @@ class TopKLawsSpec extends SparkSpec {
           if (r.isNullAt(1)) None else Some(r.getInt(1)),
           r.getLong(2))).toSet
 
-      for ((label, got) <- Seq("heap" -> run(), "fallback" -> withMaxRows("1")(run()))) {
+      for ((label, got) <- Seq("heap" -> run(), "fallback" -> onFallback(run()))) {
         assert(got == want, s"seed=$seed k=$k scoreAsc=$scoreAsc path=$label: " +
           s"${label}-only ${got.diff(want).take(5)}, window-only ${want.diff(got).take(5)}")
         assert(got.exists(_._1.isEmpty), s"seed=$seed: corpus lost its null-key group")
@@ -181,7 +219,7 @@ class TopKLawsSpec extends SparkSpec {
     }
   }
 
-  // ---- auto budget (round 14) -------------------------------------------
+  // ---- derived budget (round 14) ----------------------------------------
 
   test("auto budget derivation: fair-share formula, floor, and slot scaling") {
     import graft.plans.TopKBudget
@@ -199,47 +237,19 @@ class TopKLawsSpec extends SparkSpec {
   }
 
   test("auto mode: the derived byte budget triggers the lossless fallback (sf100 scenario scaled via the test override)") {
-    // No explicit row conf — the plan runs in auto mode; the per-task byte
-    // budget is overridden down to 128 KB so the key-heavy corpus (the
-    // billion-distinct-key CDC shape, scaled) exceeds it mid-task.
+    // The per-task byte budget is overridden down to 128 KB so the
+    // key-heavy corpus (the billion-distinct-key CDC shape, scaled)
+    // exceeds it mid-task.
     val rng = new scala.util.Random(2024)
     val rows = (0 until 5000).map(i => (rng.nextInt(2500), rng.nextInt(50), i.toLong))
     val df = spark.createDataFrame(rows).toDF("key", "score", "id").repartition(5)
-    def run(): (Set[(Int, Int, Long)], Long) = {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val out = TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 2)
-        val got = out.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-        val fallbacks = out.queryExecution.executedPlan.collect {
-          case t: TopKPerKeyExec => t.metrics("fallbackTasks").value
-        }.sum
-        (got, fallbacks)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-    val (want, cleanFallbacks) = run()
-    assert(cleanFallbacks == 0L, "un-starved auto mode must stay on the heap here")
-    spark.conf.set(GraftStrategies.TestPerTaskBytesKey, (128 * 1024).toString)
-    try {
-      val (got, fallbacks) = run()
-      assert(fallbacks > 0L,
-        "auto byte budget of 128 KB never drove a task onto the fallback")
-      assert(got == want,
-        s"auto fallback diverged: only-fallback ${got.diff(want).take(5)}, only-heap ${want.diff(got).take(5)}")
-    } finally spark.conf.unset(GraftStrategies.TestPerTaskBytesKey)
-  }
-
-  test("explicit budget that cannot fit the executor heap fails fast naming the knobs") {
-    val df = spark.createDataFrame(Seq((1, 1, 1L))).toDF("key", "score", "id")
-    val e = intercept[Throwable] {
-      withMaxRows("2000000000") { // 2e9 rows x ~88 B x 4 slots >> the test heap
-        TopK.perKey(df, Seq("key"), Seq("score" -> true, "id" -> true), 1).collect()
-      }
-    }
-    val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .map(t => String.valueOf(t.getMessage)).mkString("\n")
-    assert(msgs.contains(GraftStrategies.MaxRowsKey), s"message misses the budget knob: $msgs")
-    assert(msgs.contains("spark.executor.memory"), s"message misses the memory knob: $msgs")
-    assert(msgs.contains("spark.sql.shuffle.partitions"), s"message misses the partition knob: $msgs")
+    val (want, cleanFallbacks) = countedTopK(df, 2)
+    assert(cleanFallbacks == 0L, "the un-starved derived budget must stay on the heap here")
+    val (got, fallbacks) = countedTopK(df, 2, Some(128L * 1024))
+    assert(fallbacks > 0L,
+      "a byte budget of 128 KB never drove a task onto the fallback")
+    assert(got == want,
+      s"fallback diverged: only-fallback ${got.diff(want).take(5)}, only-heap ${want.diff(got).take(5)}")
   }
 
   test("fallback with forced DISK spills: identical results, real spill bytes observed") {
@@ -262,7 +272,7 @@ class TopKLawsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     spark.conf.set(GraftStrategies.TestSpillFrequencyKey, "64") // spill every 64 inserts
     try {
-      val got = withMaxRows("1")(run())
+      val got = onFallback(run())
       assert(got == want,
         s"disk-spill path diverged: spill-only ${got.diff(want).take(5)}, heap-only ${want.diff(got).take(5)}")
       // settle the async listener bus, then require REAL disk spill bytes
