@@ -70,7 +70,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
     val selected = only.fold(SparkEntry.queries.toSeq)(SparkEntry.named)
     val cpus = GraftSession.localCores
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     graft.queries.SourcesDdl.cleanStaleScratch()
     val metrics = JobMetrics.attach(spark.sparkContext)
     val calibStart = calibrate(spark)

@@ -106,6 +106,7 @@ object GraftSession {
   def localCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
-  /** [[getOrCreate]] on local[cores] with one shuffle partition per core. */
-  def local(cores: Int = localCores): SparkSession = getOrCreate(s"local[$cores]", cores)
+  /** [[getOrCreate]] on local[n], n = [[localCores]], with one shuffle
+    * partition per core. */
+  def local(): SparkSession = { val c = localCores; getOrCreate(s"local[$c]", c) }
 }

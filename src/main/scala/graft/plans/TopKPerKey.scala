@@ -74,7 +74,8 @@ object GraftStrategies extends SparkStrategy {
   }
 }
 
-/** Auto-sizing of [[TopKPerKeyExec]]'s retained-row budget (round 14).
+/** Derives [[TopKPerKeyExec]]'s per-task retained-byte budget, its only
+  * budget (round 14).
   *
   * The heaps hold JVM object copies the memory manager does not track, so
   * the budget targets the task's FAIR SHARE of the unified pool: Spark
@@ -86,16 +87,16 @@ object GraftStrategies extends SparkStrategy {
   * each from its own heap and core count. */
 object TopKBudget {
   /** Floor: never thrash the fallback below 16 MB of retained rows. */
-  val AutoMinBytes: Long = 16L * 1024 * 1024
+  val MinBytes: Long = 16L * 1024 * 1024
   /** Per-retained-row bookkeeping estimate on top of the row payload:
     * UnsafeRow object header + copy buffer slack + priority-queue slot +
     * hash-map entry. */
   val RowOverheadBytes: Long = 64L
 
   /** Pure derivation — unit-law-tested: the task's guaranteed execution
-    * share (pool / 2·slots), floored at [[AutoMinBytes]]. */
+    * share (pool / 2·slots), floored at [[MinBytes]]. */
   def derivedPerTaskBytes(poolBytes: Long, slots: Int): Long =
-    math.max(AutoMinBytes, poolBytes / (2L * math.max(1, slots)))
+    math.max(MinBytes, poolBytes / (2L * math.max(1, slots)))
 
   private val Local = """local(?:\[([0-9]+|\*).*\])?""".r
   private val LocalCluster = """local-cluster\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,.*\]""".r

@@ -44,6 +44,11 @@ class QueriesSpec extends SparkSpec {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q), s"oracle-only keys: ${o.diff(q)}")
+    // names resolve against the same keys: trimmed, once each, and an
+    // unknown name fails the run listing every unknown name
+    assert(SparkEntry.named(" q1 ,q1").map(_._1) == Seq("q1"))
+    val e = intercept[IllegalArgumentException](SparkEntry.named("q1,nope,bogus"))
+    assert(e.getMessage.contains("nope,bogus"), e.getMessage)
   }
 
   test("entry returns rows") {

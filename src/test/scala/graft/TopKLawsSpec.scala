@@ -225,8 +225,8 @@ class TopKLawsSpec extends SparkSpec {
     import graft.plans.TopKBudget
     // the guaranteed execution fair share: pool / (2 x slots)
     assert(TopKBudget.derivedPerTaskBytes(32L << 30, 32) == (32L << 30) / 64)
-    // floor at AutoMinBytes — tiny pools must not thrash the fallback
-    assert(TopKBudget.derivedPerTaskBytes(100L << 20, 32) == TopKBudget.AutoMinBytes)
+    // floor at MinBytes — tiny pools must not thrash the fallback
+    assert(TopKBudget.derivedPerTaskBytes(100L << 20, 32) == TopKBudget.MinBytes)
     // monotone in the pool, antitone in slot count
     assert(TopKBudget.derivedPerTaskBytes(64L << 30, 8) >
       TopKBudget.derivedPerTaskBytes(32L << 30, 8))
