@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextFunctions
 import graft.plans.TextExpressions
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -128,7 +129,6 @@ object Dedup {
   def editPairs(docs: DataFrame, idCol: String, textCol: String,
                 pfxLen: Int = 12, lenBucket: Int = 32, cmpLen: Int = 96,
                 maxDist: Int = 20, blockCap: Long = 64L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Tier 1: collapse exact duplicates — blocking and Levenshtein run per
     // DISTINCT content (identical text ⇒ distance 0, no comparison needed),
     // so duplicate clusters cost O(1) candidates instead of O(d²); measured
@@ -169,16 +169,6 @@ object Dedup {
       .unionByName(intraPairs(intra, memb, "dist"))
   }
 
-  /** Exact n-gram Jaccard via inverted index: explode distinct shingles,
-    * join on shingle (only docs sharing one meet), count intersections,
-    * compute |A∩B| / (|A|+|B|-|A∩B|). The join is keyed by shingle, and
-    * shingles appearing in more than `maxDf` documents are dropped before
-    * the self-join (stop-shingle removal): one shingle shared by d docs
-    * contributes d² join rows, so a single corpus-wide stop-shingle would
-    * make its bucket quadratic at scale. Set sizes |A|,|B| are computed
-    * before the cap, so capped pairs under-estimate Jaccard (the standard
-    * stop-word approximation); results are exact when no shingle exceeds
-    * the cap (sf0.1's hottest shingle has df≈25). */
   /** Exact-duplicate collapse for the near-dup pipelines: one
     * representative per distinct raw text (identical text ⇒ identical
     * shingle set / signature), plus the member map to expand pairs back.
@@ -198,7 +188,6 @@ object Dedup {
     // ReusedExchange) — and representatives come from joining the winning
     // ids back against the scan, which AQE broadcasts when they fit; even
     // when they don't, the text moves at most once.
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("ckey"))
     val keyed = docs.select(col(idCol).as("doc_id"),
       coalesce(md5(col(textCol).cast(BinaryType)),
@@ -216,7 +205,8 @@ object Dedup {
   /** Expand representative-level pairs to all member pairs. Groups are
     * disjoint, so each unordered member pair surfaces exactly once; ids are
     * re-ordered per pair because member ids interleave across groups. */
-  private def expandPairs(repPairs: DataFrame, memb: DataFrame, scoreCol: String): DataFrame =
+  private[operators] def expandPairs(repPairs: DataFrame, memb: DataFrame,
+                                     scoreCol: String): DataFrame =
     repPairs
       .join(memb.select(col("rep_id").as("rep_a"), col("member_id").as("m_a")), Seq("rep_a"))
       .join(memb.select(col("rep_id").as("rep_b"), col("member_id").as("m_b")), Seq("rep_b"))
@@ -225,18 +215,125 @@ object Dedup {
 
   /** All intra-group member pairs for groups passing `scored` (keyed by
     * rep_id with a precomputed score column). */
-  private def intraPairs(scored: DataFrame, memb: DataFrame, scoreCol: String): DataFrame =
+  private[operators] def intraPairs(scored: DataFrame, memb: DataFrame,
+                                    scoreCol: String): DataFrame =
     scored
       .join(memb.select(col("rep_id"), col("member_id").as("m_a")), Seq("rep_id"))
       .join(memb.select(col("rep_id"), col("member_id").as("m_b")), Seq("rep_id"))
       .filter(col("m_a") < col("m_b"))
       .select(col("m_a").as("doc_a"), col("m_b").as("doc_b"), col(scoreCol))
 
-  /** All document pairs with k-shingle Jaccard ≥ `threshold`, via an
-    * inverted shingle index with exact-duplicate collapse and a stop-shingle
-    * cap (`maxDf` drops shingles shared by more documents than that —
-    * deliberately lossy for boilerplate, like the reference's common-token
-    * pruning).
+  /** The hashed-shingle index of the set-similarity joins, over the
+    * representatives of [[collapseExact]]: one (doc_id, tok) row per
+    * DISTINCT hashed `k`-shingle of each representative's text, where
+    * tok = `hash`(shingle), by default the 60-bit [[TextFunctions.hash64]].
+    * Shingles are distinct per doc, so a doc's row count is its set size.
+    *
+    * ONE build, shared behind the explicit doc-keyed `repartition`: every
+    * consumer (set sizes, df tables, candidate joins, verification arrays)
+    * reads the same shuffle stage, which AQE executes once and reuses, so
+    * the interpreted gram transform (tokens staged separately per the
+    * shinglesFromTokens contract) is not re-executed per consumer —
+    * measured 17.1 s → 6.2 s on ded_prefix at sf0.1; an eager
+    * localCheckpoint there benched SLOWER (12.7 s: it pays materialization
+    * every run without pipelining into the first consumer); on ded_ngram
+    * a checkpoint measured no faster than this exchange (2.35 s against
+    * 2.49 s median at sf0.1, inside its own run-to-run spread) and runs a
+    * job when the DataFrame is built.
+    * Two details keep every copy of the subtree identical:
+    *  - the Spread before the transform (it otherwise runs inside the
+    *    one-task scan stage of a single-split input, profiled 0.76 s
+    *    serial) is keyed on xxhash64(doc_id): hashing by doc_id itself
+    *    would already satisfy the repartition(doc_id), the optimizer would
+    *    drop that exchange, and the transform would run once per consumer;
+    *  - tok's non-nullness is pinned explicitly: a join pushes an
+    *    isnotnull(tok) filter into ITS copy of the subtree while other
+    *    copies have none, so the copies canonicalized differently and the
+    *    transform executed twice. tok is provably non-null, so the filter
+    *    is a no-op that makes every copy identical.
+    * For the same reason the index carries no other column (ded_ngram's
+    * csize joins in downstream) and every consumer reads both columns:
+    * column pruning pushes through the repartition, so a consumer that
+    * reads fewer columns gets a copy of its own.
+    *
+    * Hashed elements (round 11): every downstream exchange carries 8-byte
+    * longs instead of ~25-byte strings, and array_intersect compares
+    * integers (measured 3.7 s → 1.9 s on ded_prefix at sf0.1, shuffle
+    * 185 MB → 60 MB). The oracles hash identically before their all-pairs
+    * replays, so gate results stay exact over HASHED shingle sets: a
+    * within-doc collision merges the same two elements on both engines
+    * (array_distinct post-hash here, list_distinct post-hash there), and
+    * a set-similarity value can drift from its string-set value only on a
+    * 60-bit md5 collision inside one pair's union (≈27k-element universe
+    * at sf0.1 ⇒ P ≈ 3e-10 corpus-wide). */
+  private def shingleIndex(reps: DataFrame, k: Int,
+                           hash: Column => Column = TextFunctions.hash64): DataFrame =
+    Spread(reps.select(col("doc_id"), col("text")), xxhash64(col("doc_id")))
+      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
+      .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("t"), k).as("ss"))
+      .select(col("doc_id"), explode(
+        array_distinct(transform(col("ss"), e => hash(e)))).as("tok"))
+      .filter(col("tok").isNotNull)
+      .repartition(col("doc_id"))
+
+  /** Each doc's elements of a [[shingleIndex]] under the global rarity
+    * order (document frequency ascending, then tok): adds `pos`, the
+    * element's 1-based rank within its doc, and `n`, the doc's set size.
+    * Any consistent global order keeps a prefix filter lossless;
+    * rarity-first only shrinks its buckets, so df counts representatives
+    * (weighting by csize would add a join for no candidate-set change).
+    * No join-strategy hint on the df join (round 11): the df table is
+    * heavy-hitter-sized, so AQE broadcasts it at any scale where it fits
+    * (measured 3.4 s → 2.7 s on ded_prefix at sf0.1) and falls back to a
+    * shuffled join when runtime sizes demand. */
+  private def rarityRanked(idx: DataFrame): DataFrame = {
+    val dfreq = idx.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+    idx.join(dfreq, Seq("tok"))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+  }
+
+  /** Corpus-weighted document frequency of each element of an inverted
+    * index idx(doc_id, tok) over representatives: (tok, df), df summing
+    * the group sizes reps(doc_id, csize) of the docs that hold tok, so a
+    * cap on df measures frequency over the FULL corpus (an element of one
+    * content duplicated d times has df = d, exactly as uncollapsed).
+    * Callers drop the elements over their cap before [[overlapCounts]]:
+    * one element shared by d docs costs d² join rows, so a corpus-wide
+    * boilerplate element would make its bucket quadratic at scale, and
+    * it carries no discriminating signal. */
+  private[operators] def weightedDf(idx: DataFrame, reps: DataFrame): DataFrame =
+    idx.join(reps.select(col("doc_id"), col("csize")), Seq("doc_id"))
+      .groupBy(col("tok")).agg(sum(col("csize")).as("df"))
+
+  /** Shared elements per representative pair of a capped inverted index
+    * kept(doc_id, tok): (rep_a, rep_b, n) with rep_a < rep_b and n ≥ 1.
+    * The self-join is pinned shuffle_hash: its keys are high-cardinality
+    * and near-uniform once capped (hottest surviving element ≤ the cap),
+    * so a hash join per partition beats sort-merge's double sort of the
+    * index (measured 2x on ded_ngram at sf0.1); AQE still splits skewed
+    * partitions below the cap. */
+  private[operators] def overlapCounts(kept: DataFrame): DataFrame = {
+    val k = kept.hint("shuffle_hash")
+    k.select(col("tok"), col("doc_id").as("rep_a"))
+      .join(k.select(col("tok"), col("doc_id").as("rep_b")), Seq("tok"))
+      .filter(col("rep_a") < col("rep_b"))
+      .groupBy(col("rep_a"), col("rep_b"))
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** All document pairs whose k-shingle Jaccard exceeds `threshold`, via
+    * an inverted shingle index: explode distinct shingles, self-join on
+    * the shingle (only docs sharing one meet), count intersections and
+    * compute |A∩B| / (|A|+|B|−|A∩B|). Exact duplicates collapse first
+    * ([[collapseExact]]), so the index holds distinct contents only.
+    * Shingles whose corpus frequency exceeds `maxDf` are dropped before the
+    * self-join ([[weightedDf]]; deliberately lossy for boilerplate, like
+    * the reference's common-token pruning). Set sizes |A|,|B| are counted
+    * before the cap, so capped pairs under-estimate Jaccard (the standard
+    * stop-word approximation); results are exact when no shingle exceeds
+    * the cap (sf0.1's hottest shingle has df≈25).
     *
     * HASHED-ELEMENT CONTRACT (round 11): set elements are the 60-bit
     * [[TextFunctions.hash64]] of each shingle string, not the string
@@ -270,80 +367,34 @@ object Dedup {
                         // deliberately TINY space to make the collision
                         // semantics above observable and law-checked.
                         shingleHash: Column => Column = TextFunctions.hash64): DataFrame = {
-    // Tier 1: collapse exact duplicates; the inverted index is built over
-    // distinct contents only.
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    // csize rides along the shingle explode (one long per row) so the
-    // corpus-weighted df needs no extra join.
-    // Round 11: elements are the 60-bit [[TextFunctions.hash64]] of each
-    // shingle, not the ~25-byte string — the same shuffle-width scheme
-    // prefixJaccardPairs/containmentPairs adopted: the inverted index, df
-    // agg, self-join and size aggs all carry 8-byte longs, and the oracle
-    // hashes identically before its replay, so intersection/size counts
-    // (hence every jaccard double) are equal over hashed sets up to a
-    // 60-bit within-union md5 collision (~1e-10 corpus-wide). The
-    // brute-force law in DedupLawsSpec compares against STRING-set jaccard
-    // and stays green — the collision-free regime really is value-exact.
-    // Round 14 note: a spread before this transform was tried and
-    // MEASURED SLOWER (2.3 -> 3.0s at sf0.1): inv0's three consumers prune
-    // different columns, so the transform recomputes per consumer either
-    // way, and the extra exchange + per-task overhead of three wide stages
-    // outweighed parallelizing a transform that is not the dominant cost.
-    // Round 15 (guide §1.2 / §2.1 — don't compute things twice): profiled
-    // at sf0.1, the tokenize/shingle/md5 transform ran FOUR times as
-    // ~0.75 s single-task stages (sizes agg, df agg, and both join
-    // consumers' map sides) — 3.0 s of the query's 4.5 s task time. The
-    // index is now materialized ONCE via Lineage.truncate (same per-run
-    // localCheckpoint mechanism the graph fixpoints use — recomputed every
-    // run, nothing persists across runs), built wide behind a Spread so
-    // the single materialization uses the machine. All four consumers
-    // then read the checkpointed rows. At 100 TB this is the standard
-    // materialize-the-inverted-index call:
-    // the index is 24 B/row versus a ~4x recompute of the full token
-    // stream, and reliable-checkpoint mode (Lineage.ReliableKey) keeps it
-    // fault-tolerant on a real cluster.
-    val inv0 = Lineage.truncate(
-      Spread(
-          reps.select(col("doc_id"), col("csize"), col("text")), col("doc_id"))
-        .select(col("doc_id"), col("csize"), TextFunctions.tokens(col("text")).as("t"))
-        .select(col("doc_id"), col("csize"),
-          TextFunctions.shinglesFromTokens(col("t"), k).as("ss"))
-        .select(col("doc_id"), col("csize"), explode(
-          array_distinct(transform(col("ss"), e => shingleHash(e)))).as("shingle")))
-    // shingles are distinct per doc, so |shingle set| = exploded row count
-    // (true set sizes, counted before stop-shingle removal)
-    val sizes = inv0.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // document frequency per shingle, weighted by group size so the cap
-    // still measures frequency over the FULL corpus (a shingle in one
-    // content duplicated d times has df = d, exactly as uncollapsed); the
-    // surviving hot set is tiny (≤ total_rows / maxDf heavy hitters), so
-    // AQE broadcasts the anti-join
-    val stop = inv0
-      .groupBy(col("shingle")).agg(sum(col("csize")).as("df"))
-      .filter(col("df") > maxDf).select(col("shingle"))
-    // shuffle_hash: the shingle self-join keys are high-cardinality and
-    // near-uniform once capped (hottest surviving shingle ≤ maxDf docs), so
-    // a hash join per partition beats sort-merge's double sort of the
-    // inverted index (measured 2x at sf0.1); AQE still splits skewed
-    // partitions below the cap.
-    val inv = inv0.select(col("doc_id"), col("shingle"))
-      .join(stop, Seq("shingle"), "left_anti").hint("shuffle_hash")
-    val inter = inv.alias("x").join(inv.alias("y"), col("x.shingle") === col("y.shingle"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("rep_a"), col("y.doc_id").as("rep_b"))
-      .agg(count(lit(1)).as("inter"))
-    val repPairs = inter
+    val idx = shingleIndex(reps, k, shingleHash)
+    // true set sizes, counted before the cap. count(tok), not count(1):
+    // a consumer that reads only doc_id would prune tok through the
+    // repartition and stop sharing the index (see shingleIndex)
+    val sizes = idx.groupBy(col("doc_id")).agg(count(col("tok")).as("n_sh"))
+    // The cap drops the stop set, which is tiny (≤ corpus rows / maxDf
+    // heavy hitters), so AQE broadcasts it; joining the set to KEEP, as
+    // Winnow does, measured 2.1 → 3.1 s here at sf0.1. The drop is a left
+    // outer join plus a null test, not a left anti-join: the optimizer
+    // pushes an anti-join below the index's repartition, that copy of the
+    // index stops matching the others, and the shingle hash runs twice.
+    val stop = weightedDf(idx, reps).filter(col("df") > maxDf)
+      .select(col("tok"), lit(true).as("stop"))
+    val kept = idx.join(stop, Seq("tok"), "left").filter(col("stop").isNull)
+      .select(col("doc_id"), col("tok"))
+    val repPairs = overlapCounts(kept)
       .join(sizes.select(col("doc_id").as("rep_a"), col("n_sh").as("na")), Seq("rep_a"))
       .join(sizes.select(col("doc_id").as("rep_b"), col("n_sh").as("nb")), Seq("rep_b"))
       .select(col("rep_a"), col("rep_b"),
-        (col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter"))).as("jaccard"))
+        (col("n").cast(DoubleType) / (col("na") + col("nb") - col("n"))).as("jaccard"))
       .filter(col("jaccard") > threshold)
     // Tier 2: expand back. Intra-group jaccard is computed over SURVIVING
     // shingles — s/(n+n−s) — the same value the uncollapsed join produces
     // for two identical docs after stop-shingle removal (1.0 when nothing
     // was capped); s = 0 yields 0, which the threshold filter drops, just
     // as docs with no surviving shingles never meet in the join.
-    val surv = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("s_sh"))
+    val surv = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("s_sh"))
     val intraScores = reps.filter(col("csize") > 1)
       .select(col("doc_id").as("rep_id"))
       .join(sizes.withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"))
@@ -386,7 +437,6 @@ object Dedup {
     * content; intra-group pairs are Jaccard 1.0 by construction. */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                          threshold: Double = 0.5, shingleK: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(threshold > 0 && threshold <= 1,
       s"prefixJaccardPairs: threshold must be in (0, 1], got $threshold")
     // Exact rational UNDER-approximation tNum/tDen <= threshold, from the
@@ -408,70 +458,17 @@ object Dedup {
     def ceilMul(n: Column, num: Long, den: Long): Column =
       ((n * num + (den - 1)) / den).cast(LongType)
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    // ONE shingle build, shared behind an explicit doc-keyed exchange: the
-    // repartition gives AQE a common shuffle stage to reuse across the
-    // multi-consumer plan (sizes+arrays, df table, both prefix-join
-    // sides), so the interpreted gram transform (tokens staged separately
-    // per the shinglesFromTokens contract) is not re-executed once per
-    // consumer — measured 17.1s → 6.2s at sf0.1; an eager localCheckpoint
-    // was tried and benched SLOWER (12.7s: it pays materialization every
-    // run without pipelining into the first consumer).
-    // Round 11: the set elements are the 60-bit [[TextFunctions.hash64]]
-    // of each shingle, not the shingle string — every downstream exchange
-    // (inverted index, df table, candidate join, verification arrays)
-    // carries 8-byte longs instead of ~25-byte strings and array_intersect
-    // compares integers (measured 3.7s → 1.9s at sf0.1, shuffle 185 MB →
-    // 60 MB). The oracle hashes identically before its all-pairs replay,
-    // so the gate semantics stay exact over HASHED shingle sets: a
-    // within-doc collision merges the same two elements on both engines
-    // (array_distinct post-hash here, list_distinct post-hash there), and
-    // cross-doc hash equality is hash-consistent by construction. True
-    // Jaccard can drift from string-set Jaccard only on a 60-bit md5
-    // collision inside one pair's union (~27k-element universe ⇒
-    // P ≈ 3e-10 corpus-wide).
-    // Round 14 (guide §2.5/§2.4): spread the narrow raw rows before the
-    // tokenize/shingle/md5 transform — it otherwise runs inside the ONE-task
-    // scan stage of a single-split input (profiled 0.76 s serial here) —
-    // and pin tok's non-nullness EXPLICITLY: the candidate join pushes an
-    // isnotnull(tok) filter into ITS copy of this subtree while the arrs
-    // copy has none, so the two shared-exchange copies canonicalized
-    // differently and the transform executed twice (two 3.05 MB exchanges
-    // in the r14 before-plan). tok is provably non-null (md5 of non-null
-    // shingles), so the filter is a no-op that makes every copy identical —
-    // one execution + ReusedExchange for the rest. The spread is keyed on
-    // xxhash64(doc_id), not doc_id: hashing by doc_id itself would already
-    // satisfy the shared repartition(doc_id) below, the optimizer would
-    // drop that exchange, and the transform would run once per consumer.
-    val srows = Spread(reps.select(col("doc_id"), col("text")), xxhash64(col("doc_id")))
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"),
-        TextFunctions.shinglesFromTokens(col("t"), shingleK).as("ss"))
-      .select(col("doc_id"), explode(
-        array_distinct(transform(col("ss"), e => TextFunctions.hash64(e)))).as("tok"))
-      .filter(col("tok").isNotNull)
-      .repartition(col("doc_id"))
-    // shingles are distinct per doc (shinglesFromTokens dedups), so the
-    // collected array IS the set and its length the set size
-    val arrs = srows.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("tok"))).as("toks"),
-        count(lit(1)).as("n"))
-    // rep-level df: any consistent global order is lossless (rarity-first
-    // only shrinks buckets); weighting by csize would also be correct but
-    // adds a join for no candidate-set change
-    val dfreq = srows.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))
-    // No join-strategy hint on the DF join (round 11): the df table is
-    // heavy-hitter-sized, so AQE broadcasts it at any scale where it fits
-    // (measured 3.4s -> 2.7s at sf0.1) and falls back to a shuffled join
-    // when runtime sizes demand. The candidate SELF-join below is the
-    // opposite case — both sides are the prefix index (data-sized,
-    // symmetric; broadcast can never apply past toy scale) — and is pinned
-    // shuffle_hash: left to AQE it becomes a sort-merge join that pays two
-    // full sorts of the index (measured 37.5s vs 5.96s at sf10; the hint
-    // costs ~0.4s at sf0.1 where AQE would have broadcast one side).
-    val prefix = srows.join(dfreq, Seq("tok"))
-      .withColumn("pos", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+    val idx = shingleIndex(reps, shingleK)
+    // the collected array IS the set (elements are distinct per doc)
+    val arrs = idx.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("tok"))).as("toks"))
+    // The candidate SELF-join below is pinned shuffle_hash: both sides are
+    // the prefix index (data-sized, symmetric; broadcast can never apply
+    // past toy scale), and left to AQE it becomes a sort-merge join that
+    // pays two full sorts of the index (measured 37.5s vs 5.96s at sf10;
+    // the hint costs ~0.4s at sf0.1 where AQE would have broadcast one
+    // side).
+    val prefix = rarityRanked(idx)
       .filter(col("pos") <= col("n") - ceilMul(col("n"), tNum, tDen) + 1)
       .select(col("tok"), col("doc_id"), col("n"), col("pos"))
     // positional filter (the "PP" of PPJoin, Xiao et al. WWW'08): a join row
@@ -521,12 +518,6 @@ object Dedup {
       .unionByName(intraPairs(intra, memb, "jaccard"))
   }
 
-  /** SimHash: 64-bit signature where bit b is set iff the majority of token
-    * hashes have bit b set (hash64 is 60-bit, so bits 60+ stay clear and the
-    * sign bit never sets). Explode-then-aggregate formulation: the md5-based
-    * token hash is computed exactly once per token, and the 64 per-bit
-    * counts are codegen'd sum aggregates in a single shuffle keyed by doc —
-    * linear scaling, no interpreted higher-order loops. */
   /** Prefix-filtered containment-similarity join: directional near-dup pairs
     * (doc_a, doc_b) with C(A,B) = |S_A ∩ S_B| / |S_A| ≥ tNum/tDen over
     * 3-shingle sets — the doc-inside-doc detector (quotations, boilerplate
@@ -546,31 +537,11 @@ object Dedup {
     * containment exactly 1 in both directions. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        tNum: Int = 4, tDen: Int = 5, shingleK: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    // Hashed shingle elements + shared doc-keyed exchange — same scheme
-    // and same oracle-exactness argument as [[prefixJaccardPairs]] (the
-    // contain oracle hashes identically before its all-pairs replay).
-    // Spread + explicit isnotnull: same two round-14 fixes as
-    // [[prefixJaccardPairs]] (single-task transform stage; filter-pushdown
-    // divergence defeating the shared exchange's reuse). The spread's key
-    // is hashed so its partitioning stays distinct from the shared
-    // repartition(doc_id) below, which therefore survives.
-    val srows = Spread(reps.select(col("doc_id"), col("text")), xxhash64(col("doc_id")))
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"),
-        TextFunctions.shinglesFromTokens(col("t"), shingleK).as("ss"))
-      .select(col("doc_id"), explode(
-        array_distinct(transform(col("ss"), e => TextFunctions.hash64(e)))).as("tok"))
-      .filter(col("tok").isNotNull)
-      .repartition(col("doc_id"))
-    val arrs = srows.groupBy(col("doc_id"))
+    val idx = shingleIndex(reps, shingleK)
+    val arrs = idx.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("tok"))).as("toks"))
-    val dfreq = srows.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))
-    val ranked = srows.join(dfreq, Seq("tok"))
-      .withColumn("pos", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+    val ranked = rarityRanked(idx)
     val prefixA = ranked
       .filter(col("pos") <= col("n") - expr(s"(n * $tNum + ${tDen - 1}) div $tDen") + 1)
       .select(col("tok"), col("doc_id").as("rep_a"), col("n").as("na"),
@@ -620,14 +591,6 @@ object Dedup {
     expanded.unionByName(intra)
   }
 
-  /** Block-mean perceptual hash (the pHash family, Yang et al. 2006) over a
-    * media payload viewed as unsigned 8-bit samples: 64 equal blocks, bit b
-    * set iff block b's mean exceeds the payload mean. The mean comparison
-    * is cleared of both divisions — s_b·N > S·c_b in exact integers — so
-    * signatures are bit-identical on any engine/partitioning. This is the
-    * image near-dup primitive (crops/brightness shifts flip few blocks);
-    * with the container's decoders stubbed, payload = utf-8 bytes, exactly
-    * like [[Multimodal]]. */
   /** One-pass block-mean signature, the exact integer arithmetic of the
     * previous column pipeline (posexplode(split(text,'')) → ascii per char
     * → groupBy(doc,blk) sums → per-doc window totals → bit fold) evaluated
@@ -669,6 +632,14 @@ object Dedup {
     sig
   }
 
+  /** Block-mean perceptual hash (the pHash family, Yang et al. 2006) over a
+    * media payload viewed as unsigned 8-bit samples: 64 equal blocks, bit b
+    * set iff block b's mean exceeds the payload mean. The mean comparison
+    * is cleared of both divisions — s_b·N > S·c_b in exact integers — so
+    * signatures are bit-identical on any engine/partitioning. This is the
+    * image near-dup primitive (crops/brightness shifts flip few blocks);
+    * with the container's decoders stubbed, payload = utf-8 bytes, exactly
+    * like [[Multimodal]]. */
   def phash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     // Map-only form (round 15, guide §1.2 "the distributed algorithm"):
     // the per-character posexplode produced one row per payload byte and
@@ -724,21 +695,8 @@ object Dedup {
   def phashPairs(docs: DataFrame, idCol: String, textCol: String,
                  maxHamming: Int = 6): DataFrame = {
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    val sigs = phash(reps, "doc_id", "text")
-    val chunked = sigs.select(col("doc_id"), col("phash"),
-      explode(array((0 until 4).map(c =>
-        struct(lit(c).as("c"), expr(s"(phash >> ${c * 16}) & 65535").as("ckey"))): _*)).as("ck"))
-      .select(col("doc_id"), col("phash"), col("ck.c").as("c"), col("ck.ckey").as("ckey"))
-    val cand = chunked.select(col("c"), col("ckey"), col("doc_id").as("rep_a"), col("phash").as("pa"))
-      .join(chunked.select(col("c"), col("ckey"), col("doc_id").as("rep_b"), col("phash").as("pb")),
-        Seq("c", "ckey"))
-      .filter(col("rep_a") < col("rep_b"))
-      .select(col("rep_a"), col("rep_b"), col("pa"), col("pb"))
-      .distinct()
-    val repPairs = cand
-      .select(col("rep_a"), col("rep_b"),
-        expr("bit_count(pa ^ pb)").cast(LongType).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val repPairs = hammingPairs(
+      phash(reps, "doc_id", "text").select(col("doc_id"), col("phash").as("sig")), maxHamming)
     val intra = reps.filter(col("csize") > 1 && col("text").isNotNull)
       .select(col("doc_id").as("rep_id"))
       .withColumn("hamming", lit(0L))
@@ -746,6 +704,12 @@ object Dedup {
       .unionByName(intraPairs(intra, memb, "hamming"))
   }
 
+  /** SimHash: 64-bit signature where bit b is set iff the majority of token
+    * hashes have bit b set (hash64 is 60-bit, so bits 60+ stay clear and the
+    * sign bit never sets). Explode-then-aggregate formulation: the md5-based
+    * token hash is computed exactly once per token, and the 64 per-bit
+    * counts are codegen'd sum aggregates in a single shuffle keyed by doc —
+    * linear scaling, no interpreted higher-order loops. */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // spread before the normalize/tokenize/md5 transform (round 14,
     // guide §2.5 — single-split inputs run it one-task otherwise)
@@ -763,6 +727,31 @@ object Dedup {
       when(col(s"c$b") * 2 > col("n_tok"), lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
     counted.select(col("doc_id"), sig.as("simhash"))
+  }
+
+  /** Hamming band join over 64-bit signatures sigs(doc_id, sig): each
+    * signature splits into 4 × 16-bit chunk keys, docs sharing any
+    * (chunk, key) become candidates, and each distinct candidate pair is
+    * verified by bit_count(a ^ b) ≤ `maxHamming`. Candidate generation is
+    * lossless through Hamming 3 (pigeonhole over 4 chunks) and a banding
+    * recall heuristic above it (see [[phashPairs]]). The chunk key is the
+    * signature's bits verbatim, not a hash, so it adds no collision class.
+    * Returns (rep_a, rep_b, hamming) with rep_a < rep_b. */
+  private def hammingPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
+    val chunked = sigs.select(col("doc_id"), col("sig"),
+      explode(array((0 until 4).map(c => struct(lit(c).as("chunk"),
+        shiftright(col("sig"), c * 16).bitwiseAND(65535L).as("ckey"))): _*))
+        .as("ck"))
+      .select(col("doc_id"), col("sig"), col("ck.chunk"), col("ck.ckey"))
+    chunked.select(col("chunk"), col("ckey"), col("doc_id").as("rep_a"), col("sig").as("sig_a"))
+      .join(chunked.select(col("chunk"), col("ckey"), col("doc_id").as("rep_b"),
+        col("sig").as("sig_b")), Seq("chunk", "ckey"))
+      .filter(col("rep_a") < col("rep_b"))
+      .select(col("rep_a"), col("rep_b"), col("sig_a"), col("sig_b"))
+      .distinct()
+      .select(col("rep_a"), col("rep_b"),
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast(LongType).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** SimHash near-dup pairs within `maxHamming` (≤ 3 with 4 chunks). */
@@ -785,21 +774,8 @@ object Dedup {
     // (identical text ⇒ identical simhash ⇒ hamming exactly 0) — see
     // collapseExact.
     val (reps, memb) = collapseExact(docs, idCol, textCol)
-    val sigs = simhash(reps, "doc_id", "text")
-    val chunked = sigs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(c => struct(lit(c).as("chunk"),
-        shiftright(col("simhash"), c * 16).bitwiseAND(65535L).as("ckey"))): _*))
-        .as("ck"))
-      .select(col("doc_id"), col("simhash"), col("ck.chunk"), col("ck.ckey"))
-    val a = chunked.select(col("chunk"), col("ckey"), col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
-    val b = chunked.select(col("chunk"), col("ckey"), col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-    val repPairs = a.join(b, Seq("chunk", "ckey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"), col("sig_a"), col("sig_b"))
-      .distinct()
-      .select(col("rep_a"), col("rep_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast(LongType).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val repPairs = hammingPairs(
+      simhash(reps, "doc_id", "text").select(col("doc_id"), col("simhash").as("sig")), maxHamming)
     // Tier 2: intra-group pairs have hamming exactly 0. Unlike the
     // shingle-based pipelines, simhash's token explode drops null texts
     // (tokens(null) = null), so a null-text doc has NO signature and never

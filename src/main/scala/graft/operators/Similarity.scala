@@ -180,21 +180,6 @@ object Similarity {
           (col("norm_a") * col("norm_b"))).as("raw_score"))
   }
 
-  /** SemDeDup-style semantic deduplication (Abbas et al., arXiv:2303.09540):
-    * assign every vector to its nearest seed centroid (IVF cell), generate
-    * candidate pairs only WITHIN a cell, and mark a vector as a duplicate
-    * iff it has a lower-id in-cell neighbor with cosine >= `threshold`.
-    * Keeping the lowest id per neighborhood is the deterministic stand-in
-    * for the paper's keep-one-per-group rule.
-    *
-    * Scale design: this is the whole point of SemDeDup — the O(N²) cosine
-    * comparison collapses to O(Σ |cell|²), and cell size is controlled by
-    * `nCells` (production: nCells ~ N/1000, centroids from
-    * [[kmeansCells]]). The assignment broadcast is C rows; the pair join is
-    * keyed on cell_id — never a cartesian. The cheap `raw` prefilter runs
-    * before `round` because Round allocates a BigDecimal per row (see
-    * [[cosinePairsBlocked]]'s note); `threshold - 1e-5` is safely below the
-    * smallest raw value that rounds to >= threshold at 6 decimals. */
   /** Tier-1 exact collapse for vector pipelines: (vec_id, embedding, rep_id)
     * membership where rep_id = min vec_id among bit-identical embeddings.
     * Hash-aggregate + join back (cheaper than a window, which would sort the
@@ -223,6 +208,21 @@ object Similarity {
     * zero-norm (and NULL) vectors never produce duplicate pairs. */
   private def normsPositive(a: Column, b: Column): Column = a > 0 && b > 0
 
+  /** SemDeDup-style semantic deduplication (Abbas et al., arXiv:2303.09540):
+    * assign every vector to its nearest seed centroid (IVF cell), generate
+    * candidate pairs only WITHIN a cell, and mark a vector as a duplicate
+    * iff it has a lower-id in-cell neighbor with cosine >= `threshold`.
+    * Keeping the lowest id per neighborhood is the deterministic stand-in
+    * for the paper's keep-one-per-group rule.
+    *
+    * Scale design: this is the whole point of SemDeDup — the O(N²) cosine
+    * comparison collapses to O(Σ |cell|²), and cell size is controlled by
+    * `nCells` (production: nCells ~ N/1000, centroids from
+    * [[kmeansCells]]). The assignment broadcast is C rows; the pair join is
+    * keyed on cell_id — never a cartesian. The cheap `raw` prefilter runs
+    * before `round` because Round allocates a BigDecimal per row (see
+    * [[cosinePairsBlocked]]'s note); `threshold - 1e-5` is safely below the
+    * smallest raw value that rounds to >= threshold at 6 decimals. */
   def semanticDedup(corpus: DataFrame, nCells: Int, threshold: Double): DataFrame = {
     // Tier 1: collapse bit-identical embeddings to one representative (min
     // id) — SemDeDup's standard exact-dedup pre-pass. Identical vectors get

@@ -42,51 +42,38 @@ object Winnow {
     * is pinned by `WinnowLawsSpec`'s SIGMOD'03 transcription. */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String,
                    k: Int = 4, w: Int = 5,
-                   gramHash: Column => Column = md5): DataFrame =
-    fingerprintRows(docs, idCol, textCol, k, w, Seq.empty, gramHash)
-
-  /** [[fingerprints]] with extra per-doc columns carried through the
-    * pipeline (constant per doc_id, e.g. a duplicate-group size) — avoids a
-    * join back onto the doc table afterward. */
-  private def fingerprintRows(docs: DataFrame, idCol: String, textCol: String,
-                              k: Int, w: Int, extra: Seq[String],
-                              gramHash: Column => Column = md5): DataFrame = {
+                   gramHash: Column => Column = md5): DataFrame = {
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("idx"))
     val gram = concat_ws(" ",
       col("tok") +: (1 until k).map(j => lead(col("tok"), j).over(byDoc)): _*)
-    val ex = extra.map(col)
     // Spread the narrow raw rows before normalize/tokenize (round 14, guide
     // §2.5): the transform otherwise runs one-task inside a single-split
     // scan stage, and the doc-keyed exchange this inserts ALSO satisfies
     // byDoc's window distribution, so the gram/md5/window stage runs wide
     // with no additional exchange.
-    Spread(docs.select(col(idCol).as("doc_id") +: col(textCol).as("__text") +: ex: _*),
-        col("doc_id"))
-      .select(col("doc_id") +:
-        TextFunctions.tokens(TextFunctions.normalize(col("__text"))).as("t") +: ex: _*)
+    Spread(docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")), col("doc_id"))
+      .select(col("doc_id"),
+        TextFunctions.tokens(TextFunctions.normalize(col("__text"))).as("t"))
       .filter(size(col("t")) >= k)
-      .select(col("doc_id") +: size(col("t")).as("n") +: ex :+
-        posexplode(col("t")).as(Seq("idx", "tok")): _*)
+      .select(col("doc_id"), size(col("t")).as("n"), posexplode(col("t")).as(Seq("idx", "tok")))
       // assemble the k-gram from the next k-1 tokens; trailing rows whose
       // gram would be short (concat_ws skips the lead() nulls) are cut
       .withColumn("gram", gram)
       .filter(col("idx") <= col("n") - k)
-      .select(col("doc_id") +: col("idx") +: (col("n") - (k - 1)).as("ng") +:
-        gramHash(col("gram")).as("h") +: ex: _*)
+      .select(col("doc_id"), col("idx"), (col("n") - (k - 1)).as("ng"),
+        gramHash(col("gram")).as("h"))
       .withColumn("wmin", min(col("h")).over(byDoc.rowsBetween(0, w - 1)))
       .filter(col("idx") <= greatest(lit(0), col("ng") - w))
-      .groupBy(col("doc_id") +: col("wmin") +: ex: _*)
+      .groupBy(col("doc_id"), col("wmin"))
       .agg(count(lit(1)).as("_cnt"))
-      .select(col("doc_id") +: col("wmin").as("fp") +: ex: _*)
+      .select(col("doc_id"), col("wmin").as("fp"))
   }
 
   /** Candidate near-dup pairs: docs sharing ≥ `minShared` winnowed
     * fingerprints, via the inverted fingerprint index (keyed self-join,
     * never all-pairs). Fingerprints shared by more than `dfCap` documents
-    * are dropped first — the stop-shingle pattern: a boilerplate fingerprint
-    * shared corpus-wide would make its join bucket quadratic at 100 TB,
-    * and it carries no discriminating signal. shuffle_hash because the
-    * fingerprint keys are high-cardinality and near-uniform.
+    * are dropped first — the stop-shingle pattern of [[Dedup.weightedDf]];
+    * [[Dedup.overlapCounts]] then counts the shared fingerprints.
     *
     * Exact duplicates collapse FIRST (the round-4 tier the other dedup
     * families use, [[Dedup.collapseExact]]): identical text winnows to the
@@ -101,36 +88,22 @@ object Winnow {
     * semantics. */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
             k: Int = 4, w: Int = 5, dfCap: Int = 50,
-            minShared: Long = 2L,
-            gramHash: Column => Column = md5): DataFrame = {
+            minShared: Long = 2L): DataFrame = {
     val (reps, memb) = Dedup.collapseExact(docs, idCol, textCol)
-    val fps = fingerprintRows(reps, "doc_id", "text", k, w, Seq("csize"), gramHash)
-    val keep = fps.groupBy(col("fp"))
-      .agg(sum(col("csize")).as("df"))
-      .filter(col("df") <= dfCap)
-      .select(col("fp"))
-    val kept = fps.join(keep, Seq("fp")).hint("shuffle_hash")
-    val repPairs = kept.select(col("fp"), col("doc_id").as("rep_a"))
-      .join(kept.select(col("fp"), col("doc_id").as("rep_b")), Seq("fp"))
-      .filter(col("rep_a") < col("rep_b"))
-      .groupBy(col("rep_a"), col("rep_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-    val cross = repPairs
-      .join(memb.select(col("rep_id").as("rep_a"), col("member_id").as("m_a")),
-        Seq("rep_a"))
-      .join(memb.select(col("rep_id").as("rep_b"), col("member_id").as("m_b")),
-        Seq("rep_b"))
-      .select(least(col("m_a"), col("m_b")).as("doc_a"),
-        greatest(col("m_a"), col("m_b")).as("doc_b"), col("n_shared"))
+    val fps = fingerprints(reps, "doc_id", "text", k, w)
+      .select(col("doc_id"), col("fp").as("tok"))
+    // The cap joins the set to KEEP, which stays partitioned by fingerprint
+    // for the self-join; dropping the stop set as ded_ngram does measured
+    // 2.4 → 3.5 s here at sf0.1 (more exchanges).
+    val keep = Dedup.weightedDf(fps, reps).filter(col("df") <= dfCap).select(col("tok"))
+    val kept = fps.join(keep, Seq("tok"))
+    val repPairs = Dedup.overlapCounts(kept).filter(col("n") >= minShared)
+      .select(col("rep_a"), col("rep_b"), col("n").as("n_shared"))
     // identical docs share ALL the group's surviving fingerprints
     val intra = kept.groupBy(col("doc_id").as("rep_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      .join(memb.select(col("rep_id"), col("member_id").as("m_a")), Seq("rep_id"))
-      .join(memb.select(col("rep_id"), col("member_id").as("m_b")), Seq("rep_id"))
-      .filter(col("m_a") < col("m_b"))
-      .select(col("m_a").as("doc_a"), col("m_b").as("doc_b"), col("n_shared"))
-    cross.unionByName(intra)
+    Dedup.expandPairs(repPairs, memb, "n_shared")
+      .unionByName(Dedup.intraPairs(intra, memb, "n_shared"))
   }
 }

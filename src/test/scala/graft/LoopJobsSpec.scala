@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * eager checkpoint job and every convergence test a probe job, so a count
   * that moves means a checkpoint, probe or count was added or dropped).
   * The counts come from [[JobMetrics]], so this is a check of the recorder
-  * too.
+  * too. The same counter pins the dedup operators, which have no loop, at
+  * zero jobs during DataFrame construction.
   */
 class LoopJobsSpec extends SparkSpec {
 
@@ -68,6 +69,14 @@ class LoopJobsSpec extends SparkSpec {
       "kcoreToFixpoint" -> 29,
       "kcorePeel" -> 11)
     assert(got == want)
+  }
+
+  test("building a dedup query runs no job beyond loading its documents") {
+    // loading the table runs its schema inference; construction adds none
+    val load = jobsOf(Tables.documents(spark, sfDir))
+    for (name <- Seq("ded_exact", "ded_edit", "ded_minhash", "ded_ngram", "ded_prefix",
+        "ded_contain", "ded_winnow", "ded_simhash", "ded_phash"))
+      assert(jobsOf(SparkEntry.queries(name)(spark, sfDir)) == load, name)
   }
 
   test("HITS construction runs as many jobs at rounds = 6 as at rounds = 2") {

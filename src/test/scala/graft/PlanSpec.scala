@@ -88,6 +88,33 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("shingle index: the shingle hash runs in one stage, other consumers reuse its exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Md5}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // nodes evaluating transform(shingles, s -> hash64(s)); the shingle
+    // build's own transform carries no md5
+    def hashing(p: SparkPlan): Int = aqe.collect(p) {
+      case n if n.expressions.exists(_.exists {
+        case t: ArrayTransform => t.function.exists(_.isInstanceOf[Md5])
+        case _ => false
+      }) => n
+    }.size
+    for (name <- Seq("ded_prefix", "ded_contain", "ded_ngram")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect() // the AQE-final plan lives on this QueryExecution
+      val plan = df.queryExecution.executedPlan
+      // counts, not plan text: AQE plans vary run to run in join sides
+      assert(hashing(plan) == 1,
+        s"$name: the shingle hash should run in exactly one stage:\n$plan")
+      val reused = aqe.collect(plan) { case r: ReusedExchangeExec => r }
+      assert(reused.exists(r => hashing(r.child) == 1),
+        s"$name: no consumer reads the shingle index through a reused exchange:\n$plan")
+    }
+  }
+
   test("sim_ivf: centroid assignment broadcasts the centroid side") {
     val plan = executedPlan("sim_ivf")
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange")
